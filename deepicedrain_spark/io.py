@@ -11,6 +11,7 @@ push projections/predicates into the parquet scan.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,38 +110,97 @@ def spread_scan(df: DataFrame) -> DataFrame:
     input split arrives as ONE partition and every downstream map — and
     the stream side of every broadcast join — runs on one core (r13
     optimization round; measured 13x on the embedding pair scorer).
-    Gated on the scan's own partition count, so at scale — where the
-    table spans thousands of splits — this is a NO-OP and no shuffle of
-    real data is ever added; the repartition only fires when the whole
-    input is a handful of splits, i.e. when the shuffle is kilobytes.
-    Callers must not rely on row order (every certified query compares
-    order-insensitively)."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
+    Gated on the parquet ROW-GROUP count read from the footers (row
+    groups bound the number of non-empty scan tasks), so at scale —
+    where the table spans thousands of files — this is a NO-OP decided
+    from the file count alone, and no shuffle of real data is ever
+    added; the repartition only fires when the whole input is a handful
+    of row groups, i.e. when the shuffle is kilobytes. A frame with no
+    file source is returned unchanged. Callers must not rely on row
+    order (every certified query compares order-insensitively)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files or len(files) >= n:
+        return df
+    if sum(m.num_row_groups for m in _footers(files)) >= n:
+        return df
+    return df.repartition(n)
 
 
-def table_rows(sf_dir: str, name: str) -> int:
-    """Row count straight from parquet footer metadata — no Spark job.
-    Used to pick small-corpus fast paths (dedup banding break-even)
-    without paying a count() over the data. Handles both a single
-    parquet file and a directory of part files."""
-    import glob
+# --- fences: one size-aware layer for every inter-stage materialization
+#
+# A localCheckpoint freezes its parent's partitioning, so a fence fed by
+# a 32-way shuffle made EVERY downstream scan of it a 32-task stage even
+# when it holds a few hundred rows (dissolve_hot_key_bucketed ran 3,309
+# tasks for 66 input polygons; guide §2.2/§6.1). Fences are therefore
+# coalesced to ceil(rows / ROWS_PER_TASK) partitions — AFTER they are
+# materialized, so the stage that computes the fenced table keeps its
+# own width and only the scans of the result are narrowed. coalesce(k)
+# is a narrow, shuffle-free no-op when the table already has <= k
+# partitions, so big inputs keep their parallelism and a row hint that
+# over-estimates (an input-table upper bound) is always safe.
+# ~13 doubles/row ≈ 150 B ⇒ 500k rows ≈ 75 MB per task, inside the
+# guide's 100 MB–1 GB band.
+ROWS_PER_TASK = 500_000
 
+
+def _footers(files: list[str]) -> list:
+    """Parquet footer metadata of ``files`` (URIs as ``inputFiles()``
+    returns them) — driver-side metadata reads, no Spark job."""
     import pyarrow.parquet as pq
+    from pyarrow import fs
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        # recursive: hive-partitioned output (k=<v>/part-*.parquet from
-        # write_parquet(partition_by=...)) has no top-level files and a
-        # flat glob would silently report 0 rows
-        return sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    out = []
+    for uri in files:
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        with filesystem.open_input_file(path) as f:
+            out.append(pq.read_metadata(f))
+    return out
+
+
+def rows_hint(df: DataFrame) -> int | None:
+    """Upper bound on ``df``'s rows: the footer row counts of every
+    parquet file under its scans (filters and projections above the
+    scan are ignored). Starts no Spark job; None when ``df`` has no
+    file source (``spark.range``, in-memory frames, fences)."""
+    files = df.inputFiles()
+    if not files:
+        return None
+    return sum(m.num_rows for m in _footers(files))
+
+
+def size_to(df: DataFrame, rows: int) -> DataFrame:
+    """Coalesce an already-materialized frame to ceil(rows /
+    ROWS_PER_TASK) partitions (no-op when it has fewer)."""
+    return df.coalesce(max(1, math.ceil(rows / ROWS_PER_TASK)))
+
+
+def fence(df: DataFrame, rows: int | None = None, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` as a localCheckpoint at the width of the
+    stage that produces it, then — when a row bound is known — size
+    the result with :func:`size_to`. A lazy fence (``eager=False``) is
+    materialized by the first job that reads it — through a sized
+    wrapper that job would run at the coalesced width — so it takes no
+    ``rows``; size it with ``size_to`` once that job has run."""
+    if rows is not None and not eager:
+        raise ValueError("fence: a lazy fence cannot be sized before it is materialized")
+    out = df.localCheckpoint(eager=eager)
+    return out if rows is None else size_to(out, rows)
+
+
+def release(df: DataFrame) -> None:
+    """Free the checkpoint blocks under a fenced frame (or a sized /
+    projected wrapper of one). ``DataFrame.unpersist`` cannot: the
+    blocks belong to the RDD inside the plan's LogicalRDD leaf, not to
+    a cached plan. Any later read of the frame fails loudly
+    ("Checkpoint block ... not found"), so release only what no live
+    frame reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            # constructor field 1 of LogicalRDD is its RDD[InternalRow]
+            leaf.productElement(1).unpersist(False)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -23,6 +23,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _scd2_row(cols: list, key: str, attrs: list[str]) -> F.Column:
+    """One SCD2 output row as a struct from positional columns
+    [key, *attrs, valid_from, valid_to]. zip would truncate silently on
+    a wrong-length list, so the length is checked."""
+    if len(cols) != len(attrs) + 3:
+        raise ValueError(
+            f"SCD2 row expects {len(attrs) + 3} columns "
+            f"(key, {len(attrs)} attrs, valid_from, valid_to), got {len(cols)}"
+        )
+    return F.struct(
+        cols[0].alias(key),
+        *[c.alias(a) for c, a in zip(cols[1:-2], attrs)],
+        cols[-2].alias("valid_from"),
+        cols[-1].alias("valid_to"),
+    )
+
+
 def scd2_apply(
     current: DataFrame,
     updates: DataFrame,
@@ -84,45 +101,37 @@ def scd2_apply(
     # and 3 of its single join row). Branch predicates and per-branch
     # column expressions are verbatim, so every surviving value is
     # bit-identical to the union form.
-    def _row(cols: list) -> F.Column:
-        # positional layout: [key, *attrs, valid_from, valid_to] — zip
-        # would truncate silently on a wrong-length list, so pin it
-        assert len(cols) == len(attrs) + 3, (
-            f"_row expects {len(attrs) + 3} columns "
-            f"(key, {len(attrs)} attrs, valid_from, valid_to), got {len(cols)}"
-        )
-        return F.struct(
-            cols[0].alias(key),
-            *[c.alias(a) for c, a in zip(cols[1:-2], attrs)],
-            cols[-2].alias("valid_from"),
-            cols[-1].alias("valid_to"),
-        )
-
     # open rows with no update, or update equal to current → unchanged
     keep_open_row = F.when(
         ~has_upd | (has_cur & ~changed_cond),
-        _row(
+        _scd2_row(
             [F.col(f"cur.{key}")]
             + [F.col(f"cur.{a}") for a in attrs]
-            + [F.col("cur.valid_from"), F.col("cur.valid_to")]
+            + [F.col("cur.valid_from"), F.col("cur.valid_to")],
+            key,
+            attrs,
         ),
     )
     # changed keys: close the old row
     closed_now_row = F.when(
         has_cur & has_upd & changed_cond,
-        _row(
+        _scd2_row(
             [F.col(f"cur.{key}")]
             + [F.col(f"cur.{a}") for a in attrs]
-            + [F.col("cur.valid_from"), F.lit(batch_time).cast("long")]
+            + [F.col("cur.valid_from"), F.lit(batch_time).cast("long")],
+            key,
+            attrs,
         ),
     )
     # changed + brand-new keys: open a fresh row
     opened_now_row = F.when(
         has_upd & (~has_cur | changed_cond),
-        _row(
+        _scd2_row(
             [F.col(f"upd.{key}")]
             + [F.col(f"upd.{a}") for a in attrs]
-            + [F.lit(batch_time).cast("long"), F.lit(None).cast("long")]
+            + [F.lit(batch_time).cast("long"), F.lit(None).cast("long")],
+            key,
+            attrs,
         ),
     )
     merged = (

@@ -86,6 +86,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence, size_to
+
 # per-task pair budget + salt cap, same constants as the crossover's
 # _auto_salt (operators/crossover.py) — a key/cell whose own pair work
 # exceeds one task's budget is a straggler regardless of siblings
@@ -335,33 +337,6 @@ def _auto_salt(cells: DataFrame, key_cols: list[str]) -> tuple[int, int]:
     return max(1, min(_SALT_CAP, math.ceil(mx * mx / _PAIR_TARGET))), tot
 
 
-# target rows per task for the checkpointed edge/cell tables (r12
-# optimization round, guide §2.2/§6.1): a localCheckpoint freezes its
-# parent's partitioning, so a 32-partition parent made EVERY
-# downstream scan stage a 32-task stage even when the table holds a
-# few hundred rows — dissolve_hot_key_bucketed ran 3,309 tasks for 66
-# input polygons, almost all empty (measured ~2 s of pure scheduling
-# at sf0.1).  Sizing is data-derived (row count from the salt probe,
-# which materializes the checkpoint anyway), never core-count-derived:
-# big inputs keep (or exceed) their parallelism because coalesce(k)
-# with k ≥ current partitions is a no-op.  ~13 doubles/row ≈ 150 B ⇒
-# 500k rows ≈ 75 MB per task, inside the guide's 100 MB–1 GB band
-# (the pair join fanning OUT of these scans re-partitions on its own
-# shuffle, so task width here only governs the scan/map stages).
-_CKPT_ROWS_PER_TASK = 500_000
-
-
-def _sized(df: DataFrame, rows: int) -> DataFrame:
-    """Coalesce a (checkpointed) table to ceil(rows/target) partitions
-    — purely physical: narrow dependency, no shuffle, no recompute of
-    the materialized checkpoint, and a no-op when the table already
-    has fewer partitions."""
-    import math
-
-    k = max(1, math.ceil(rows / _CKPT_ROWS_PER_TASK))
-    return df.coalesce(k)
-
-
 def _q(c: str) -> str:
     """Backtick-quote an identifier for the SQL-text fragments below.
 
@@ -418,7 +393,7 @@ def _edge_pairs_counted(
     """Candidate edge pairs of a key, a-prefixed × b-prefixed; also
     returns the cell-row count observed by the salt probe (None in
     plain mode, where no probe runs) so callers can right-size their
-    shared edge checkpoint (see _sized).
+    shared edge checkpoint (io.size_to).
 
     plain: in-key self-join — every pair, exactly once per direction.
     cells: pairs co-located in a per-key grid cell (every contact —
@@ -448,19 +423,19 @@ def _edge_pairs_counted(
     cx_hi = F.floor(F.greatest("x1", "x2") / F.col("_cell"))
     cy_lo = F.floor(F.least("y1", "y2") / F.col("_cell"))
     cy_hi = F.floor(F.greatest("y1", "y2") / F.col("_cell"))
-    cells = (
+    # both join sides reuse one materialization; lazy so the salt
+    # probe's count is the job that materializes it (an eager
+    # checkpoint would spend a separate job first)
+    cells = fence(
         cells.withColumn("cx", F.explode(F.sequence(cx_lo, cx_hi)))
         .withColumn("cy", F.explode(F.sequence(cy_lo, cy_hi)))
-        .drop("_cell")
-        # both join sides reuse one materialization; lazy so the salt
-        # probe's count is the job that materializes it (an eager
-        # checkpoint would spend a separate job first)
-        .localCheckpoint(eager=False)
+        .drop("_cell"),
+        eager=False,
     )
     salt, rows = _auto_salt(cells, key_cols)
     # the probe just materialized the checkpoint; size every scan of
-    # it to the data (see _sized/_CKPT_ROWS_PER_TASK)
-    cells = _sized(cells, rows)
+    # it to the data
+    cells = size_to(cells, rows)
     keys = [*key_cols, "cx", "cy"]
     a = cells.selectExpr(*[_q(c) for c in keys], *_pair_cols("a"))
     b = cells.selectExpr(*[_q(c) for c in keys], *_pair_cols("b"))
@@ -571,10 +546,10 @@ def boundary_subedges(
             # doesn't re-analyze the explode per branch (the crossover
             # join does the same). Lazy: the pair join's salt probe
             # forces it.
-            edges = edges.localCheckpoint(eager=False)
+            edges = fence(edges, eager=False)
     if _pairs is None and bucketed:
         _pairs, _cell_rows = _edge_pairs_counted(edges, key_cols, bucketed)
-        edges = _sized(edges, _cell_rows)
+        edges = size_to(edges, _cell_rows)
     if _pairs is None and not bucketed:
         _pairs = _edge_pairs(edges, key_cols, bucketed, _spread_n)
     splits = (
@@ -930,7 +905,7 @@ def overlap_components(
     else:
         edges = _edges(polys, key_cols, pid)
         if bucketed:
-            edges = edges.localCheckpoint(eager=False)
+            edges = fence(edges, eager=False)
     # crossing PAIRS (pid, pid) — _crossings drops the partner pid (it
     # only needs split params), so pairs are derived directly here
     if _pairs is None:
@@ -938,7 +913,7 @@ def overlap_components(
             edges, key_cols, bucketed, _spread_n
         )
         if _cell_rows is not None:
-            edges = _sized(edges, _cell_rows)
+            edges = size_to(edges, _cell_rows)
     # SQL-text assembly (see _q) — trees identical to the former
     # Column-API construction
     pair = _pairs.where("apid < bpid")
@@ -1200,12 +1175,12 @@ def dissolve_stats(
     strategy = "cells" if bucketed else "plain"
     edges = _edges(polys, key_cols, pid)
     if bucketed:
-        edges = edges.localCheckpoint(eager=False)
+        edges = fence(edges, eager=False)
     pairs, _cell_rows = _edge_pairs_counted(edges, key_cols, bucketed, spread_n)
     if _cell_rows is not None:
         # the salt probe materialized the edge checkpoint; size every
         # downstream scan of it (cell rows ≥ edge rows — same scale)
-        edges = _sized(edges, _cell_rows)
+        edges = size_to(edges, _cell_rows)
     bnd = boundary_subedges(
         polys, key_cols, pid, eps, strategy,
         _edges_df=edges, _pairs=pairs, _spread_n=spread_n,

@@ -22,27 +22,18 @@ and every earlier round.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Checkpointed per-round state tables inherit their parent shuffle's
-# partition count (32 locally), so on a small graph every round ran
-# dozens of near-empty tasks per stage. Like dissolve._CKPT_ROWS_PER_TASK
-# (r12): coalesce the state to ceil(rows/500k) partitions before each
-# checkpoint — a narrow no-shuffle merge that is a NO-OP whenever the
-# table already needs that many partitions, so big graphs keep their
-# parallelism (r13 optimization round, guide §2.2/§6.1).
-_CKPT_ROWS_PER_TASK = 500_000
+from deepicedrain_spark.io import fence, release, size_to
 
-
-def _sized(df: DataFrame, rows: int) -> DataFrame:
-    # no partition probe: .rdd costs a full physical-planning pass
-    # (~0.16 s/call driver-side, measured r13), while coalesce(k) is
-    # already a plan-level no-op when the input has <= k partitions
-    k = max(1, math.ceil(rows / _CKPT_ROWS_PER_TASK))
-    return df.coalesce(k)
+# Checkpointed per-round state tables are sized to the edge count
+# (io.fence / io.size_to, r13 optimization round): their parent
+# shuffle's 32 partitions made every round run dozens of near-empty
+# tasks per stage on a small graph, while big graphs keep their
+# parallelism. The row bound is one count over the checkpointed edge
+# table, not a partition probe (.rdd costs a full physical-planning
+# pass, ~0.16 s/call driver-side, measured r13).
 
 
 def connected_components(
@@ -60,24 +51,20 @@ def connected_components(
     # re-carry the upstream edge-producing subtree (e.g. a full
     # minhash pipeline), and per-round driver planning dominates on
     # small graphs
-    sym = (
+    sym = fence(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # one cheap count over the checkpointed RDD sizes every per-round
-    # state table (labels rows <= sym rows) — see _sized
+    # state table (labels rows <= sym rows)
     n_sym = sym.count()
-    sym = _sized(sym, n_sym)
-    labels = (
-        _sized(
-            sym.select(F.col("a").alias("node")).distinct().withColumn(
-                "label", F.col("node")
-            ),
-            n_sym,
-        )
-        .localCheckpoint(eager=True)
+    sym = size_to(sym, n_sym)
+    labels = fence(
+        sym.select(F.col("a").alias("node")).distinct().withColumn(
+            "label", F.col("node")
+        ),
+        n_sym,
     )
     # labels only ever decrease, so the label sum is a strictly
     # decreasing convergence metric — one cheap agg per round instead
@@ -97,20 +84,19 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("bl").alias("nl"))
         )
-        stepped = (
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
+        # lazy fence (r13, guide §5.4): the pointer jump consumes
+        # stepped on BOTH sides of an aliased self-join keyed on
+        # DIFFERENT columns (label vs node), so the planner cannot
+        # reuse one exchange and the neighbor-min join executed twice
+        # per round. The fence materializes stepped once (when
+        # jumped's eager checkpoint runs) — O(nodes) state, the same
+        # table the round keeps anyway.
+        stepped = fence(
+            labels.join(nbr_min, labels.node == nbr_min.a, "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
-            )
-            # lazy fence (r13, guide §5.4): the pointer jump consumes
-            # stepped on BOTH sides of an aliased self-join keyed on
-            # DIFFERENT columns (label vs node), so the planner cannot
-            # reuse one exchange and the neighbor-min join executed
-            # twice per round. The fence materializes stepped once
-            # (when jumped's eager checkpoint runs) — O(nodes) state,
-            # the same table the round keeps anyway.
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         # pointer jump: label <- label's label (labels are node ids, so
         # an inner self-join always finds the parent row)
@@ -124,18 +110,18 @@ def connected_components(
         # checkpoint every round: label tables are tiny (one row per
         # node in the edge set) and a truncated plan keeps round
         # planning O(1) instead of O(iterations)
-        jumped = _sized(jumped, n_sym).localCheckpoint(eager=True)
+        jumped = fence(jumped, n_sym)
         new_sum = jumped.agg(F.sum("label")).collect()[0][0]
-        # jumped is materialized — stepped's lazily-checkpointed blocks
-        # are no longer needed (same hygiene as labels below)
-        stepped.unpersist()
-        labels.unpersist()
+        # jumped is materialized — the previous round's checkpointed
+        # blocks are no longer read
+        release(stepped)
+        release(labels)
         labels = jumped
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
 
-    sym.unpersist()
+    release(sym)
     return labels.select(F.col("node").alias(out_node), F.col("label").alias(out_comp))
 
 
@@ -166,19 +152,17 @@ def pagerank(
     Every round localCheckpoints the O(nodes) rank table, keeping the
     per-round plan O(1) like connected_components above.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
+    e = fence(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     # one cheap count over the checkpointed RDD sizes the per-round
-    # state tables (nodes/deg/ranks rows <= 2*edge rows) — see _sized
+    # state tables (nodes/deg/ranks rows <= 2*edge rows)
     n_e = e.count()
-    e = _sized(e, n_e)
-    nodes = _sized(
+    e = size_to(e, n_e)
+    nodes = fence(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct(),
         n_e,
-    ).localCheckpoint(eager=True)
+    )
     n_nodes = nodes.count()
     if n_nodes == 0:
         # legitimately empty edge set (e.g. a near-dup threshold that
@@ -188,11 +172,9 @@ def pagerank(
     # fence deg ONCE (r13, guide §5.4): unfenced, its groupBy shuffle
     # re-executed per round for BOTH consumers (contribution join +
     # dangling anti-join) — 2*iters shuffles of an O(nodes) table
-    deg = _sized(
-        e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")), n_e
-    ).localCheckpoint(eager=True)
+    deg = fence(e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")), n_e)
     ranks = nodes.withColumn("rank", F.round(F.lit(1.0 / n_nodes), round_dp))
-    for _ in range(iters):
+    for i in range(iters):
         contrib = (
             e.join(ranks.withColumnRenamed("node", "u"), "u")
             .join(deg, "u")
@@ -206,7 +188,7 @@ def pagerank(
             deg.withColumnRenamed("u", "node"), "node", "left_anti"
         ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
         prev = ranks
-        ranks = (
+        ranks = fence(
             nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -220,14 +202,14 @@ def pagerank(
                     ),
                     round_dp,
                 ).alias("rank"),
-            )
+            ),
+            n_e,
         )
-        ranks = _sized(ranks, n_e).localCheckpoint(eager=True)
         # drop the superseded round's checkpointed blocks (same hygiene
         # as connected_components) — without this a long run pins
-        # `iters` copies of the O(nodes) rank table in executor storage
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
+        # `iters` copies of the O(nodes) rank table in executor
+        # storage. Round 0's prev is a projection of nodes, which every
+        # round still reads.
+        if i:
+            release(prev)
     return ranks

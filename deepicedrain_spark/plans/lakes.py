@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence, rows_hint
 from deepicedrain_spark.operators.clustering import find_clusters_signed
 from deepicedrain_spark.operators.filters import adaptive_median_filter, magnitude_filter
 from deepicedrain_spark.operators.spatial import (
@@ -72,12 +73,14 @@ def lake_attributes_and_significance(
     rgt_col: str | None = "referencegroundtrack",
     donut_m: float = DONUT_BUFFER,
     k: float = SIGNIFICANCE_K,
-    ckpt_parts: int | None = None,
+    rows: int | None = None,
 ) -> DataFrame:
     """M2+M3: per surviving cluster — hull geometry, donut significance
     test against the surrounding points, and the reference's attribute
     set (num_points, maxabsdhdt, inner/outer medians, outer std/MAD,
-    piped refgtracks)."""
+    piped refgtracks). ``rows`` bounds every intermediate (an
+    input-row upper bound, e.g. ``io.rows_hint``) and sizes the fences
+    (``io.fence``); None leaves them at their producing stage's width."""
     # the cluster table is the root of FOUR downstream subtrees (stats,
     # hulls→rings, two donut passes). localCheckpoint (not persist):
     # besides running the PIP-join + DBSCAN chain once, it TRUNCATES
@@ -86,17 +89,7 @@ def lake_attributes_and_significance(
     # driver planning time dominated this query's wall clock. members
     # is the post-threshold active set (a small fraction of the input
     # by construction), so executor-local storage holds it at scale.
-    # fence right-sizing (r13, the dissolve/graph _CKPT_ROWS_PER_TASK
-    # rule): the fences below inherit their parent shuffle's fan-out
-    # (32 near-empty partitions locally); ``ckpt_parts`` — an
-    # input-row-derived upper bound from the caller (ceil(rows/500k),
-    # plan-level no-op at scale) — sizes them to the data
-    def _sized(df: DataFrame) -> DataFrame:
-        return df if ckpt_parts is None else df.coalesce(ckpt_parts)
-
-    members = _sized(
-        clustered.filter(F.col("cluster_id").isNotNull())
-    ).localCheckpoint()
+    members = fence(clustered.filter(F.col("cluster_id").isNotNull()), rows)
 
     aggs = [
         F.count(F.lit(1)).alias("num_points"),
@@ -115,7 +108,7 @@ def lake_attributes_and_significance(
     # one row per cluster — checkpoint so the three ring consumers
     # (outer polys, inner polys, final join) plan against a leaf
     hulls = convex_hulls(members, [basin_col, "cluster_id"])
-    rings = _sized(buffered(hulls, "hull", donut_m)).localCheckpoint()
+    rings = fence(buffered(hulls, "hull", donut_m), rows)
 
     # donut membership: inside buffered hull, outside hull
     from deepicedrain_spark.operators.spatial import bbox_predicate
@@ -139,14 +132,15 @@ def lake_attributes_and_significance(
     )
     # narrow donut point set, computed ONCE (the MAD pass needs
     # deviations from the outer median → two aggregations over it)
-    donut_pts = _sized(
+    donut_pts = fence(
         in_outer.join(
             F.broadcast(inner_polys),
             (F.col("_b") == F.col("_b2")) & (F.col("_c") == F.col("_c2")),
         )
         .filter(~inner_pred)
-        .select("_b", "_c", dhdt)
-    ).localCheckpoint(eager=True)
+        .select("_b", "_c", dhdt),
+        rows,
+    )
     donut = donut_pts.groupBy(
         F.col("_b").alias(basin_col), F.col("_c").alias("cluster_id")
     ).agg(
@@ -191,7 +185,6 @@ def find_lakes(
     eps: float = DBSCAN_EPS,
     min_samples: int = DBSCAN_MIN_SAMPLES,
     basin_col: str = "basin_name",
-    ckpt_parts: int | None = None,
 ) -> DataFrame:
     """Full pipeline: PIP basins → filters → signed DBSCAN → hulls +
     donut significance → lake attribute table.
@@ -201,7 +194,9 @@ def find_lakes(
     multiple aggregation passes read them; the RESULT is an O(lakes)
     table, so it is eagerly materialized here and the point-table cache
     released before returning — repeated find_lakes calls (per region /
-    epoch) do not accumulate executor storage."""
+    epoch) do not accumulate executor storage. Every fence is sized
+    from ``io.rows_hint(points)`` (parquet footers, no job)."""
+    rows = rows_hint(points)
     # labeled feeds both the cluster path and the donut all_points scan
     labeled = label_basins(points, basins).persist()
     try:
@@ -209,11 +204,9 @@ def find_lakes(
             labeled, basin_col, eps=eps, min_samples=min_samples
         )
         out = lake_attributes_and_significance(
-            clustered, labeled, basin_col, ckpt_parts=ckpt_parts
+            clustered, labeled, basin_col, rows=rows
         )
-        if ckpt_parts:
-            out = out.coalesce(ckpt_parts)
-        out = out.localCheckpoint(eager=True)
+        out = fence(out, rows)
     finally:
         labeled.unpersist()
     return out

@@ -44,6 +44,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from deepicedrain_spark.io import fence, release
 from deepicedrain_spark.sources.naming import safe_key_component
 
 _SPARK_TO_NP = {
@@ -310,7 +311,7 @@ def write_zarr(
     # (shuffle order, AQE coalesce, sample), silently corrupting the
     # global index. spark_partition_id is stable on the checkpointed
     # partitions, making the two passes consistent.
-    pinned = df.localCheckpoint(eager=True)
+    pinned = fence(df)
 
     # contiguous global row index without a single-task window: count
     # rows (and nulls) per partition in one Catalyst agg, cumsum the
@@ -436,7 +437,7 @@ def write_zarr(
         shutil.rmtree(path, ignore_errors=True)  # staging only; old store intact
         raise
     finally:
-        pinned.unpersist()
+        release(pinned)
     _publish_store(path, final_path)
 
 

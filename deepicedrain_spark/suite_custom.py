@@ -781,16 +781,9 @@ def q_lake_finder_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
         [{"poly_id": "basin", "xs": [-1.0, 60001.0, 60001.0, -1.0],
           "ys": [-1.0, -1.0, 60001.0, 60001.0]}],
     ).withColumnRenamed("poly_id", "basin_name")
-    # fence right-sizing hint: point subsets are bounded by the events
-    # row count (footer metadata, no job); no-op at scale (r13)
-    import math
-
-    from deepicedrain_spark.io import table_rows
-
-    _k = max(1, math.ceil(table_rows(sf_dir, "events") / 500_000))
     lakes = find_lakes(
         pts, basins, eps=_REF_EPS, min_samples=_REF_MIN_SAMPLES,
-        basin_col="basin_name", ckpt_parts=_k,
+        basin_col="basin_name",
     )
     return lakes.select(
         "basin_name",
@@ -825,16 +818,7 @@ def q_lake_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
         [{"poly_id": "basin", "xs": [-100.0, 2000.0, 2000.0, -100.0],
           "ys": [-100.0, -100.0, 2000.0, 2000.0]}],
     ).withColumnRenamed("poly_id", "basin_name")
-    # fence right-sizing hint (see lake_finder_reference_params)
-    import math
-
-    from deepicedrain_spark.io import table_rows
-
-    _k = max(1, math.ceil(table_rows(sf_dir, "embeddings") / 500_000))
-    lakes = find_lakes(
-        pts, basins, eps=45.0, min_samples=10, basin_col="basin_name",
-        ckpt_parts=_k,
-    )
+    lakes = find_lakes(pts, basins, eps=45.0, min_samples=10, basin_col="basin_name")
     return lakes.select(
         "basin_name",
         "cluster_id",

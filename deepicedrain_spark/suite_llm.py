@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import load_table, spread_scan
+from deepicedrain_spark.io import fence, load_table, rows_hint, spread_scan
 from deepicedrain_spark.operators import textstats as ts_ops
 from deepicedrain_spark.operators.dedup import (
     exact_duplicates,
@@ -133,10 +133,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered AllPairs at scale; below the banding break-even
     the parquet-footer row count flips the op to its small-corpus
     inverted-index path (identical, lossless result set)."""
-    from deepicedrain_spark.io import table_rows
-
     docs = spread_scan(load_table(spark, sf_dir, "documents"))  # 1-split scan, CPU-heavy text pass (io.spread_scan: no-op at scale)
-    return ngram_jaccard_op(docs, threshold=0.5, n_docs=table_rows(sf_dir, "documents"))
+    return ngram_jaccard_op(docs, threshold=0.5, n_docs=rows_hint(docs))
 
 
 # --- benchmark contamination (cross-corpus n-gram Jaccard) ------------
@@ -249,13 +247,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded (pigeonhole) candidate generation at scale — equi-join
     plan, recall exact; below the banding break-even the parquet-footer
     row count flips to the brute-force path (same result set)."""
-    from deepicedrain_spark.io import table_rows
-
     docs = load_table(spark, sf_dir, "documents")
     fps = simhash(docs, bits=32)
-    return simhash_near_pairs(
-        fps, max_hamming=2, bits=32, n_docs=table_rows(sf_dir, "documents")
-    )
+    return simhash_near_pairs(fps, max_hamming=2, bits=32, n_docs=rows_hint(docs))
 
 
 # --- cosine top-k similarity search ------------------------------------
@@ -1130,23 +1124,11 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9 finding — explode() infers a size>0 filter that sinks below
     # the exchange into the lone scan task; the CASE WHEN guard +
     # explode_outer shape infers nothing, so no localCheckpoint fence
-    # and no build-time materialization job per bench pass)
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
-    # fence right-sizing (r13, guide §2.2/§6.1, the dissolve/graph
-    # _CKPT_ROWS_PER_TASK rule): the three stage fences below inherit
-    # their parent shuffle's fan-out (32 near-empty partitions
-    # locally), so every downstream scan of a fenced stage ran dozens
-    # of near-empty tasks. Survivor tables are bounded by the corpus
-    # row count (footer metadata, no job) — coalesce to
-    # ceil(rows/500k): plan-level no-op at scale, measured
-    # 4.45 → 3.44 s warm min-of-4 at sf0.1.
-    import math
-
-    from deepicedrain_spark.io import table_rows
-
-    _k = max(1, math.ceil(table_rows(sf_dir, "documents") / 500_000))
+    # and no build-time materialization job per bench pass).
+    # Survivor tables are bounded by the corpus row count, which sizes
+    # the three stage fences below.
+    n_docs = rows_hint(docs)
+    docs = spread_scan(docs)
     w = ts_ops.whitespace_tokens(F.col("text"))
     t = docs.select("doc_id", "lang", "source", "text", w.alias("w"))
 
@@ -1170,7 +1152,11 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mwl = F.aggregate(
         "w", F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     ).cast("double") / F.size("w")
-    g = (
+    # fence at g, not only d (r12 batch 3): g feeds the dedup window
+    # AND stage_counts' n_gopher column — un-fenced, the full gopher
+    # pass (bigram explode + per-doc agg over the whole corpus)
+    # re-executed a second time for stage_counts.
+    g = fence(
         t.join(bgm, "doc_id", "left")
         .withColumn("top_bg", F.coalesce(F.col("top_bg"), F.lit(0.0)))
         .where(
@@ -1179,12 +1165,8 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.size(F.filter("w", lambda x: x.isin("the", "a"))) >= 2)
             & (F.col("top_bg") <= 0.2)
         )
-        .drop("top_bg")
-        # fence at g, not only d (r12 batch 3): g feeds the dedup
-        # window AND stage_counts' n_gopher column — un-fenced, the
-        # full gopher pass (bigram explode + per-doc agg over the
-        # whole corpus) re-executed a second time for stage_counts.
-        .coalesce(_k).localCheckpoint()
+        .drop("top_bg"),
+        n_docs,
     )
     wd = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     # localCheckpoint fences (r12 optimization round): d feeds the LM
@@ -1196,11 +1178,11 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same inter-stage materialization a production curation run
     # writes between stages anyway; values are unchanged.  d's fence
     # is cheap on top of g's (one survivor-sized dedup window).
-    d = (
+    d = fence(
         g.withColumn("_rk", F.row_number().over(wd))
         .where(F.col("_rk") == 1)
-        .drop("_rk")
-        .coalesce(_k).localCheckpoint()
+        .drop("_rk"),
+        n_docs,
     )
 
     bg = d.select(
@@ -1236,13 +1218,13 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wn = Window.partitionBy("lang").orderBy(F.desc("avg_logp"), "doc_id")
-    p = (
+    p = fence(
         d.select("doc_id", "lang", "source")
         .join(lm, "doc_id")
         .withColumn("nt", F.ntile(3).over(wn))
         .where(F.col("nt") <= 2)
-        .select("doc_id", "lang", "source")
-        .coalesce(_k).localCheckpoint()
+        .select("doc_id", "lang", "source"),
+        n_docs,
     )
 
     counts = p.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
@@ -1868,9 +1850,9 @@ def _trained_logreg(spark: SparkSession, sf_dir: str) -> tuple[list[int], DataFr
     )
     if key in _LOGREG_CACHE:
         return _LOGREG_CACHE[key]
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism).localCheckpoint()
+    spread = spread_scan(docs)
+    if spread is not docs:
+        docs = fence(spread)
     feats = hashed_bigram_features(
         docs, F.col("lang") == "en", b=_LR_B
     ).localCheckpoint()
@@ -2481,13 +2463,12 @@ def q_url_dedup_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_knn_graph_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deepicedrain_spark.io import table_rows
     from deepicedrain_spark.operators.similarity import knn_graph_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
     # parquet-footer row count (no job) sizes the block grid; 128-row
     # blocks force a real multi-block pair grid at every fixture sf
-    n = table_rows(sf_dir, "embeddings")
+    n = rows_hint(emb)
     return knn_graph_blocked(
         emb, k=3, block_rows=128, n_blocks=max(1, -(-n // 128))
     )

@@ -975,9 +975,7 @@ def q_kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beats the r8 eager-localCheckpoint fence (min 1.95 s vs 2.28 s)
     # while adding no build-time job and no executor-storage residue
     # across a long benched session (the r8 driver's 9.49 s line)
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    docs = spread_scan(docs)
     sh = (
         word_shingles(docs, "text", n=3)
         .select("source", F.explode_outer("shingles").alias("s"))

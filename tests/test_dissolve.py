@@ -722,11 +722,8 @@ def test_cells_checkpoint_sized_to_data(spark):
     own histogram pays for the count), so a 32-partition tiny input no
     longer fans every downstream scan stage out to 32 near-empty tasks
     — and the sizing must never LOSE pairs or change the overlay."""
-    from deepicedrain_spark.operators.dissolve import (
-        _CKPT_ROWS_PER_TASK,
-        _auto_salt,
-        _sized,
-    )
+    from deepicedrain_spark.io import ROWS_PER_TASK, fence, release
+    from deepicedrain_spark.operators.dissolve import _auto_salt
 
     # _auto_salt returns (salt, total rows) from one probe
     cells = spark.createDataFrame(
@@ -735,13 +732,12 @@ def test_cells_checkpoint_sized_to_data(spark):
     salt, tot = _auto_salt(cells, ["key"])
     assert salt == 1 and tot == 3
 
-    # _sized only ever reduces partitions, and scales with rows
+    # fence sizing only ever reduces partitions, and scales with rows
     wide = spark.range(0, 10, 1, 16).toDF("id")
-    assert _sized(wide, 10).rdd.getNumPartitions() == 1
-    assert _sized(wide, 3 * _CKPT_ROWS_PER_TASK).rdd.getNumPartitions() == 3
-    assert (
-        _sized(wide, 100 * _CKPT_ROWS_PER_TASK).rdd.getNumPartitions() == 16
-    )  # no-op above current
+    for rows, want in ((10, 1), (3 * ROWS_PER_TASK, 3), (100 * ROWS_PER_TASK, 16)):
+        fenced = fence(wide, rows)
+        assert fenced.rdd.getNumPartitions() == want  # 16: no-op above current
+        release(fenced)
 
     # end-to-end: a deliberately wide-partitioned input through the
     # cells strategy matches the single-partition plain result exactly

@@ -295,6 +295,19 @@ def test_scd2_apply_dedups_duplicate_update_keys(spark):
     assert per_key == {1: "c", 2: "y"}  # highest attr wins
 
 
+def test_scd2_row_rejects_wrong_length(spark):
+    """A wrong-length column list raises ValueError (not an assert,
+    which ``python -O`` strips, leaving zip to truncate silently)."""
+    import pytest
+
+    from deepicedrain_spark.operators.cdc import _scd2_row
+
+    from pyspark.sql import functions as F
+
+    with pytest.raises(ValueError, match="expects 4 columns"):
+        _scd2_row([F.col("k"), F.col("attr"), F.col("valid_from")], "k", ["attr"])
+
+
 def test_bloom_probe_handles_duplicate_probe_ids(spark):
     """Review finding r4: a duplicated probe id must not produce a
     false NEGATIVE (sum-of-hits was compared against the constant k)."""

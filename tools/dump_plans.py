@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for named queries to plans/r12/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to plans/r13/<q>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <tag> <query> [query ...]
   tag is e.g. "before" or "after".
