@@ -47,7 +47,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #   fixture  — synth_once / write-once Zarr+HDF5 stores on local disk
 #   catalog  — lake-catalog GeoJSON fixture reads
 #   trainer  — memoized Lloyd/IVF/PQ codebooks, BPE merges, logreg fits
-#   pairs    — memoized MinHash near-dup pair tables (_PAIRS_CACHE)
+#   pairs    — memoized MinHash near-dup pair tables (io.memo)
 #   pyworker — heavy mapInPandas paths whose first run pays Python
 #              worker fork + numpy import across all executor threads
 WARMUP_QUERIES = frozenset([

@@ -73,26 +73,3 @@ def xy_to_lonlat(x: Column, y: Column) -> tuple[Column, Column]:
         )
     lam = F.atan2(x_n, -y_n)
     return F.degrees(-lam), F.degrees(-phi)
-
-
-def lonlat_to_xy_pyproj_udf():
-    """Cross-check implementation via pyproj pandas UDF (Arrow-batched).
-    Raises ImportError if pyproj is absent (not in this container)."""
-    import pandas as pd  # noqa: F401
-    import pyproj  # may raise ImportError — callers must gate
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        [StructField("x", DoubleType()), StructField("y", DoubleType())]
-    )
-
-    @pandas_udf(schema)
-    def _project(lon: "pd.Series", lat: "pd.Series") -> "pd.DataFrame":
-        import pandas as pd
-
-        tf = pyproj.Transformer.from_crs(4326, 3031, always_xy=True)
-        x, y = tf.transform(lon.to_numpy(), lat.to_numpy())
-        return pd.DataFrame({"x": x, "y": y})
-
-    return _project

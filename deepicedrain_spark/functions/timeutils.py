@@ -39,14 +39,6 @@ def utctime_to_deltans(ts: Column, epoch: str = ATLAS_EPOCH) -> Column:
     return (F.unix_micros(ts) - F.lit(us_of(epoch))) * F.lit(1000)
 
 
-def ts_to_epoch_days(ts: Column, epoch: str) -> Column:
-    """Timestamp → fractional days since ``epoch`` as double.
-
-    Built from exact int64 µs so Spark and any oracle engine produce
-    bit-identical doubles (int subtraction exact, one fp division)."""
-    return (F.unix_micros(ts) - F.lit(us_of(epoch))) / F.lit(86_400_000_000.0)
-
-
 def slope_per_ns_to_per_year(slope: Column) -> Column:
     """Regression slope in units/ns → units/year (SURVEY F2)."""
     return slope * F.lit(NS_PER_YEAR)
@@ -104,8 +96,3 @@ def us_of(iso: str) -> int:
     fmt = "%Y-%m-%dT%H:%M:%S" if "T" in iso else "%Y-%m-%d"
     dt = datetime.strptime(iso, fmt).replace(tzinfo=timezone.utc)
     return int(dt.timestamp()) * 1_000_000
-
-
-def ns_of(iso: str) -> int:
-    """Python-side: UTC epoch nanoseconds of an ISO date/datetime."""
-    return us_of(iso) * 1000

@@ -38,27 +38,66 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# open-once memo for the LAZY scan DataFrame (r12 optimization round).
-# Creating a parquet reader costs ~0.14 s of driver time (schema
-# inference + analysis py4j round trips); the suite has 212 static
-# load_table sites and the bench builds every query twice, so the
-# repeated opens alone cost tens of seconds of pure driver wall.
-# This caches NO data and NO results: a DataFrame is an immutable
-# lazy plan, and every action on it re-reads the parquet files in
-# full (Spark's own FileStatusCache already shares the listing).  The
-# key carries a file fingerprint (mtime_ns, size) so a regenerated
-# table invalidates the entry instead of serving a stale schema —
-# same staleness rule as kmeans._input_fingerprint.
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
-_SCAN_CACHE_CAP = 256
+# --- memo: one store for every source-keyed reuse in a session
+#
+# The engine reuses driver-side work across the queries of one
+# application: lazy scan frames (a parquet or multiLine-JSON open costs
+# 0.1-0.3 s of schema inference per build), stream-source schemas,
+# deterministic training results (Lloyd centroids, BPE merges, logreg
+# weights) and checkpointed near-dup pair tables.  Each is a pure
+# function of its source files plus its parameters, so it is stored
+# under (applicationId, key, fingerprint(files)): a rewritten file
+# misses instead of serving a stale value, and checkpoint blocks,
+# which die with their SparkContext, are never served to another
+# application.  One FIFO bound covers every entry.
+MEMO_ENTRIES = 256
+_MEMO: dict[tuple, object] = {}
 
 
-def _path_fingerprint(path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
+def fingerprint(files: list[str]) -> tuple | None:
+    """``(uri, mtime_ns, size)`` of every file (URIs as ``inputFiles()``
+    returns them, or local paths), sorted by uri; None when ``files``
+    is empty or any of them cannot be stat'ed. Driver-side metadata
+    through the same ``FileSystem.from_uri`` resolution as the footer
+    reads; a directory's size is None."""
+    from pyarrow import fs
+
+    out = []
+    for uri in sorted(files):
+        try:
+            filesystem, path = fs.FileSystem.from_uri(uri)
+            info = filesystem.get_file_info(path)
+        except (OSError, ValueError):  # unreachable or unknown filesystem
+            return None
+        if info.type == fs.FileType.NotFound:
+            return None
+        out.append((uri, info.mtime_ns, info.size))
+    return tuple(out) or None
+
+
+def memo(spark: SparkSession, key: tuple, files: list[str], build):
+    """``build()``, stored under (application, ``key``,
+    ``fingerprint(files)``) and returned as the identical object on
+    the next call with an unchanged source. Nothing is stored when
+    there is no fingerprint (no files, or a file that cannot be
+    stat'ed): ``build()`` then runs on every call."""
+    fp = fingerprint(files)
+    if fp is None:
+        return build()
+    k = (spark.sparkContext.applicationId, key, fp)
+    if k in _MEMO:
+        return _MEMO[k]
+    out = build()
+    while len(_MEMO) >= MEMO_ENTRIES:
+        _MEMO.pop(next(iter(_MEMO)))
+    _MEMO[k] = out
+    return out
+
+
+def clear_memo() -> None:
+    """Drop every memoized value (e.g. after an in-place edit of a
+    source file that preserves its size and mtime)."""
+    _MEMO.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -66,38 +105,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown; do NOT pre-select columns here — callers' .select/.filter
     reach the scan on their own.
 
+    The lazy scan frame is memoized (:func:`memo`): it holds no data,
+    and every action on it re-reads the files.
+
     Engine convention (§1.3): ``events.ts`` is epoch NANOSECONDS as
     LongType. The testdata has shipped both encodings — INT64
     TIMESTAMP(NANOS) (read as ns-long via ``nanosAsLong``) and plain
     TIMESTAMP(MICROS) — so normalize here at the load boundary with
     session-timezone-independent math (the driver's session may not
     be UTC; see timeutils.timestamp_to_ns)."""
-    path = table_path(sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        _path_fingerprint(path),
-    )
-    hit = _SCAN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover - static conf on some builds
-        pass
-    df = spark.read.parquet(path)
-    if name == "events" and isinstance(
-        df.schema["ts"].dataType, (TimestampType, TimestampNTZType)
-    ):
-        from deepicedrain_spark.functions.timeutils import timestamp_to_ns
+    path = os.path.abspath(table_path(sf_dir, name))
 
-        df = df.withColumn(
-            "ts", timestamp_to_ns(F.col("ts"), df.schema["ts"].dataType)
-        )
-    while len(_SCAN_CACHE) >= _SCAN_CACHE_CAP:
-        _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)))
-    _SCAN_CACHE[key] = df
-    return df
+    def build() -> DataFrame:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        if name == "events" and isinstance(
+            df.schema["ts"].dataType, (TimestampType, TimestampNTZType)
+        ):
+            from deepicedrain_spark.functions.timeutils import timestamp_to_ns
+
+            df = df.withColumn(
+                "ts", timestamp_to_ns(F.col("ts"), df.schema["ts"].dataType)
+            )
+        return df
+
+    return memo(spark, ("load_table", name), [path], build)
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -201,10 +233,6 @@ def release(df: DataFrame) -> None:
         if leaf.nodeName() == "LogicalRDD":
             # constructor field 1 of LogicalRDD is its RDD[InternalRow]
             leaf.productElement(1).unpersist(False)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES if os.path.exists(table_path(sf_dir, name))}
 
 
 def register_views(

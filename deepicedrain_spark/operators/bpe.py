@@ -21,14 +21,16 @@ Scale design (100 TB):
   to the index-scan-with-skip formulation the DuckDB oracle replays.
 - determinism: winning pair per iteration = max by (count DESC, left
   ASC, right ASC) over ASCII symbols — identical in any engine, so
-  training is a pure function of (corpus, n_merges) and memoizable per
-  source fingerprint like kmeans.trained_centroids.
+  training is a pure function of (corpus, n_merges) and memoized per
+  source fingerprint (``io.memo``) like kmeans.trained_centroids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from deepicedrain_spark.io import memo
 
 _WORDS = "filter(split({col}, ' '), x -> x != '')"
 
@@ -55,61 +57,46 @@ def _apply_merge(syms: Column, a: str, b: str) -> Column:
     )
 
 
-# train-once memo (same rationale/key shape as kmeans._TRAIN_CACHE):
-# merges are a pure function of (source files, text_col, n_merges).
-_BPE_CACHE: dict[tuple, list[tuple[str, str]]] = {}
-_BPE_CACHE_CAP = 32
-
-
-def clear_bpe_cache() -> None:
-    _BPE_CACHE.clear()
-
-
 def bpe_train(
     df: DataFrame, text_col: str = "text", n_merges: int = 6
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the
-    ordered merge list [(left, right), ...]."""
-    from deepicedrain_spark.operators.kmeans import _input_fingerprint
+    ordered merge list [(left, right), ...]. File-backed inputs are
+    memoized per source fingerprint (``io.memo``)."""
 
-    fp = _input_fingerprint(df)
-    key = (fp, text_col, n_merges) if fp else None
-    if key is not None and key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    state = word_frequencies(df, text_col).withColumn(
-        "syms",
-        F.transform(F.sequence(F.lit(1), F.length("word")), lambda i: F.col("word").substr(i, F.lit(1))),
-    ).localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs = (
-            state.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("syms") - 1),
-                        lambda i: F.struct(
-                            F.element_at("syms", i).alias("a"),
-                            F.element_at("syms", (i + 1).cast("int")).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
+    def build() -> list[tuple[str, str]]:
+        state = word_frequencies(df, text_col).withColumn(
+            "syms",
+            F.transform(F.sequence(F.lit(1), F.length("word")), lambda i: F.col("word").substr(i, F.lit(1))),
+        ).localCheckpoint()
+        merges: list[tuple[str, str]] = []
+        for _ in range(n_merges):
+            pairs = (
+                state.filter(F.size("syms") >= 2)
+                .select(
+                    "freq",
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("syms") - 1),
+                            lambda i: F.struct(
+                                F.element_at("syms", i).alias("a"),
+                                F.element_at("syms", (i + 1).cast("int")).alias("b"),
+                            ),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("freq").alias("n"))
             )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("n"))
-        )
-        top = pairs.orderBy(F.desc("n"), "a", "b").limit(1).collect()
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        state = state.withColumn("syms", _apply_merge(F.col("syms"), a, b)).localCheckpoint()
-    if key is not None:
-        while len(_BPE_CACHE) >= _BPE_CACHE_CAP:
-            _BPE_CACHE.pop(next(iter(_BPE_CACHE)))
-        _BPE_CACHE[key] = merges
-    return merges
+            top = pairs.orderBy(F.desc("n"), "a", "b").limit(1).collect()
+            if not top:
+                break
+            a, b = top[0]["a"], top[0]["b"]
+            merges.append((a, b))
+            state = state.withColumn("syms", _apply_merge(F.col("syms"), a, b)).localCheckpoint()
+        return merges
+
+    return memo(df.sparkSession, ("bpe_train", text_col, n_merges), df.inputFiles(), build)
 
 
 def bpe_encode(

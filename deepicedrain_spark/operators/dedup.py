@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import memo
 from deepicedrain_spark.operators.textstats import whitespace_tokens
 
 
@@ -302,39 +303,12 @@ def jaccard_verify(
 # banding, threshold) — md5-derived permutations, no sampling — and a
 # real pipeline computes it ONCE and feeds components / PageRank /
 # keep-best / leakage-safe-split from the same edge table. Memoizing
-# the localCheckpoint'd result per (application, source fingerprint,
-# params) lets those downstream queries measure THEIR plan instead of
-# re-running the shared candidate generation (same rationale and key
-# shape as kmeans.trained_centroids, VERDICT r5 task 3 / ADVICE r6).
-# The checkpointed pairs are O(near-duplicates) on executors — no
+# the localCheckpoint'd result (io.memo: per application, source
+# fingerprint and params) lets those downstream queries measure THEIR
+# plan instead of re-running the shared candidate generation (same
+# rationale as kmeans.trained_centroids, VERDICT r5 task 3). The
+# checkpointed pairs are O(near-duplicates) on executors — no
 # driver-side collect is involved.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_PAIRS_CACHE_CAP = 16  # bounded: evict oldest insertion past this
-
-
-def clear_pairs_cache() -> None:
-    """Drop memoized near-dup pair tables (e.g. after an in-place edit
-    of a source file that preserves size and mtime)."""
-    _PAIRS_CACHE.clear()
-
-
-def _pairs_cache_key(df: DataFrame, params: tuple) -> tuple | None:
-    """Cache key, or None when the input is not a plain file scan (an
-    in-memory or derived frame has no stable fingerprint — always
-    recompute for those). localCheckpoints are tied to a SparkContext,
-    so the key leads with the application id."""
-    from deepicedrain_spark.operators.kmeans import _input_fingerprint
-
-    fp = _input_fingerprint(df)
-    if not fp:
-        return None
-    try:
-        app_id = df.sparkSession.sparkContext.applicationId
-    except Exception:
-        return None
-    return (app_id, fp, params)
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -354,33 +328,29 @@ def minhash_near_duplicates(
     was most of this query's cold wall clock). Storage is
     MEMORY_AND_DISK on executors, the same footprint persist() would
     reach once hot."""
-    key = _pairs_cache_key(df, (text_col, id_col, n, num_hashes, bands, threshold))
-    if key is not None and key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key]
-    shingled = word_shingles(df, text_col, n).localCheckpoint()
-    # docs shorter than n words have NO shingles: their signatures
-    # would be 64 identical NULL slots, banding every such doc into one
-    # shared bucket (|bucket|^2 candidate pairs) whose Jaccard then
-    # divides by a zero union (ANSI error). They cannot near-duplicate
-    # anything by definition — drop them before signing.
-    signable = shingled.filter(F.size("shingles") > 0)
-    sigs = minhash_signature(signable, "shingles", id_col, num_hashes)
-    # materialize the candidate pairs: they are tiny (O(near-dups)) but
-    # Catalyst cannot know that from the banding plan, so the fused plan
-    # shuffles the HEAVY shingle table into both verify joins. With the
-    # checkpoint, AQE sees the real size and broadcasts the candidates
-    # instead — measured 38.8s -> ~11s at 200k docs (BENCH_SCALE sf4),
-    # restoring the ~linear sf1->sf4 ratio.
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).localCheckpoint()
-    out = jaccard_verify(cands, shingled, id_col, "shingles", threshold)
-    if key is not None:
+
+    def build() -> DataFrame:
+        shingled = word_shingles(df, text_col, n).localCheckpoint()
+        # docs shorter than n words have NO shingles: their signatures
+        # would be 64 identical NULL slots, banding every such doc into one
+        # shared bucket (|bucket|^2 candidate pairs) whose Jaccard then
+        # divides by a zero union (ANSI error). They cannot near-duplicate
+        # anything by definition — drop them before signing.
+        signable = shingled.filter(F.size("shingles") > 0)
+        sigs = minhash_signature(signable, "shingles", id_col, num_hashes)
+        # materialize the candidate pairs: they are tiny (O(near-dups)) but
+        # Catalyst cannot know that from the banding plan, so the fused plan
+        # shuffles the HEAVY shingle table into both verify joins. With the
+        # checkpoint, AQE sees the real size and broadcasts the candidates
+        # instead — measured 38.8s -> ~11s at 200k docs (BENCH_SCALE sf4),
+        # restoring the ~linear sf1->sf4 ratio.
+        cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).localCheckpoint()
         # checkpoint the (small, O(near-dups)) verified pairs so later
         # callers in the same application read a materialized leaf
-        out = out.localCheckpoint()
-        while len(_PAIRS_CACHE) >= _PAIRS_CACHE_CAP:
-            _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))
-        _PAIRS_CACHE[key] = out
-    return out
+        return jaccard_verify(cands, shingled, id_col, "shingles", threshold).localCheckpoint()
+
+    key = ("minhash_near_duplicates", text_col, id_col, n, num_hashes, bands, threshold)
+    return memo(df.sparkSession, key, df.inputFiles(), build)
 
 
 # Corpus size below which a quadratic/unbanded variant beats the

@@ -156,10 +156,6 @@ def _resolve_strategy(
     return False, spread
 
 
-def _use_cells(polys: DataFrame, key_cols: list[str], strategy: str) -> bool:
-    return _resolve_strategy(polys, key_cols, strategy)[0]
-
-
 def snap_vertices(
     polys: DataFrame,
     key_cols: list[str],

@@ -80,19 +80,6 @@ def top1_by(df: DataFrame, order: list[Column]) -> DataFrame:
     return df.orderBy(*order).limit(1)
 
 
-def top_k_per_group(
-    df: DataFrame, group_cols: list[str], order: list[Column], k: int
-) -> DataFrame:
-    """Top-k rows per group via row_number (ties broken by order cols —
-    include a unique key for determinism)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.lit(k))
-        .drop("_rn")
-    )
-
-
 def ice_volume_over_time(
     df: DataFrame,
     ts_col,

@@ -60,14 +60,3 @@ def get_spark(app_name: str = "deepicedrain-spark", cpus: int | None = None) -> 
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     return builder.getOrCreate()
-
-
-def tune_for_scale(spark: SparkSession, target_rows: int) -> None:
-    """Adjust shuffle parallelism for a known input cardinality.
-
-    At 100 TB a fixed 32-partition shuffle is wrong; AQE coalesces
-    downward but the initial number must be high enough. Rule of thumb:
-    ~128 MB per shuffle partition.
-    """
-    parts = max(DEFAULT_SHUFFLE_PARTITIONS, target_rows // 2_000_000)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))

@@ -21,50 +21,35 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# open-once memo for the LAZY polygon-scan DataFrame (r12 optimization
-# round; same pattern and staleness rule as io.load_table's
-# _SCAN_CACHE).  A multiLine JSON read infers its schema by parsing
-# the whole document on open, so every read_geojson_polygons call
-# paid a driver-side parse of the catalog BEFORE any job ran — ~0.3 s
-# per build across the 7 lake-catalog queries, twice per bench pass.
-# Caches NO data and NO results: the value is an immutable lazy plan;
-# every action still re-reads and re-parses the file.  The key's
-# (mtime_ns, size) fingerprint invalidates on rewrite.
-_GEO_SCAN_CACHE: dict[tuple, DataFrame] = {}
-_GEO_SCAN_CACHE_CAP = 64
-
-
 def read_geojson_polygons(spark: SparkSession, path: str, id_property: str = "name") -> DataFrame:
     """FeatureCollection → one row per feature with (poly_id,
-    properties struct, xs, ys, bbox) — broadcast-ready polygon dim."""
-    try:
-        st = os.stat(path)
-        fp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fp = None
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), id_property, fp)
-    hit = _GEO_SCAN_CACHE.get(key) if fp is not None else None
-    if hit is not None:
-        return hit
-    raw = spark.read.option("multiLine", "true").json(path)
-    feats = raw.select(F.explode("features").alias("f"))
-    out = (
-        feats.select(
-            F.col(f"f.properties.{id_property}").alias("poly_id"),
-            F.col("f.properties").alias("properties"),
-            F.expr("transform(f.geometry.coordinates[0], p -> cast(p[0] as double))").alias("xs"),
-            F.expr("transform(f.geometry.coordinates[0], p -> cast(p[1] as double))").alias("ys"),
+    properties struct, xs, ys, bbox) — broadcast-ready polygon dim.
+
+    The lazy frame is memoized (``io.memo``): a multiLine JSON read
+    infers its schema by parsing the whole document on open — ~0.3 s
+    of driver time per build across the lake-catalog queries. Nothing
+    else is cached; every action re-reads and re-parses the file."""
+    from deepicedrain_spark.io import memo
+
+    path = os.path.abspath(path)
+
+    def build() -> DataFrame:
+        raw = spark.read.option("multiLine", "true").json(path)
+        feats = raw.select(F.explode("features").alias("f"))
+        return (
+            feats.select(
+                F.col(f"f.properties.{id_property}").alias("poly_id"),
+                F.col("f.properties").alias("properties"),
+                F.expr("transform(f.geometry.coordinates[0], p -> cast(p[0] as double))").alias("xs"),
+                F.expr("transform(f.geometry.coordinates[0], p -> cast(p[1] as double))").alias("ys"),
+            )
+            .withColumn("xmin", F.array_min("xs"))
+            .withColumn("xmax", F.array_max("xs"))
+            .withColumn("ymin", F.array_min("ys"))
+            .withColumn("ymax", F.array_max("ys"))
         )
-        .withColumn("xmin", F.array_min("xs"))
-        .withColumn("xmax", F.array_max("xs"))
-        .withColumn("ymin", F.array_min("ys"))
-        .withColumn("ymax", F.array_max("ys"))
-    )
-    if fp is not None:
-        while len(_GEO_SCAN_CACHE) >= _GEO_SCAN_CACHE_CAP:
-            _GEO_SCAN_CACHE.pop(next(iter(_GEO_SCAN_CACHE)))
-        _GEO_SCAN_CACHE[key] = out
-    return out
+
+    return memo(spark, ("read_geojson_polygons", id_property), [path], build)
 
 
 def _feature_expr(ring_col: str, property_cols: list[str]) -> F.Column:

@@ -30,37 +30,21 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# schema-read memo (r12 optimization round; io.load_table pattern):
-# every streaming query paid a fresh driver-side parquet footer read
-# (~0.1 s) per build just to recover the source schema. Caches the
-# SCHEMA only — no data, no plans; (mtime_ns, size) invalidates on a
-# regenerated table.
-_SCHEMA_CACHE: dict[tuple, StructType] = {}
-_SCHEMA_CACHE_CAP = 64
-
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """Stream-source schema = the batch reader's parquet footer schema
     (file streams need an explicit schema; deriving it from the footer
     keeps the stream correct under either ``ts`` encoding — INT64 ns
-    or TIMESTAMP(MICROS) — see io.load_table)."""
+    or TIMESTAMP(MICROS) — see io.load_table). Memoized (``io.memo``):
+    the footer read costs ~0.1 s of driver time per build."""
     import os
 
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(path)
-        fp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fp = None
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), fp)
-    if fp is not None and key in _SCHEMA_CACHE:
-        return _SCHEMA_CACHE[key]
-    schema = spark.read.parquet(path).schema
-    if fp is not None:
-        while len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_CAP:
-            _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-        _SCHEMA_CACHE[key] = schema
-    return schema
+    from deepicedrain_spark.io import memo
+
+    path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    return memo(
+        spark, ("events_schema",), [path], lambda: spark.read.parquet(path).schema
+    )
 
 
 def _stream_dir(sf_dir: str, table: str = "events") -> str:
@@ -112,10 +96,7 @@ def _stream_dir(sf_dir: str, table: str = "events") -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (bounded replay; in
     production point this at a directory Kafka/Firehose appends to)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from deepicedrain_spark.functions.timeutils import timestamp_to_ns
 
     schema = _events_schema(spark, sf_dir)
@@ -423,7 +404,7 @@ def asof_attach(
 
 
 def _asof_fold(rows, prior, key, left_type, right_type, tolerance_us):
-    """Shared micro-batch fold for both stateful as-of backends.
+    """Micro-batch fold of :func:`asof_attach`'s per-user state.
 
     Sorts on the TRUNCATED time with rights first at equal instants: a
     click sharing a µs with a purchase must see it (inclusive as-of),
@@ -455,65 +436,3 @@ def _asof_fold(rows, prior, key, left_type, right_type, tolerance_us):
             out["purchase_t_us"].append(last_rt if ok else None)
     return out, last_rt, last_rv
 
-
-def asof_attach_tws(
-    events: DataFrame,
-    left_type: str,
-    right_type: str,
-    tolerance_us: int | None = None,
-    watermark_minutes: int = 120,
-) -> DataFrame:
-    """Streaming as-of via ``transformWithStateInPandas`` (Spark 4's
-    operator-state API): identical semantics to :func:`asof_attach`
-    (same shared fold), but state lives in typed per-key ValueState in
-    the JVM state store (RocksDB provider) rather than a pickled
-    GroupState blob — the forward path for evolving-schema state,
-    timers/TTL, and state-store-native checkpointing. Python remains in
-    the loop (the processor is a pandas UDF); a fully JVM-side as-of
-    would need the Scala transformWithState surface, which PySpark does
-    not expose.
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (set it before starting the query; the
-    suite entry does)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("click_id", LongType()),
-            StructField("t_us", LongType()),
-            StructField("purchase_value", DoubleType()),
-            StructField("purchase_t_us", LongType()),
-        ]
-    )
-
-    class _AsofProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_right", "rt long, rv double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            prior = tuple(self._last.get()) if self._last.exists() else (None, None)
-            out, last_rt, last_rv = _asof_fold(
-                pd.concat(list(rows)), prior, int(key[0]), left_type, right_type, tolerance_us
-            )
-            if last_rt is not None:
-                self._last.update((last_rt, last_rv))
-            yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    filtered = events.filter(F.col("event_type").isin([left_type, right_type]))
-    return (
-        filtered.withWatermark("event_time", f"{watermark_minutes} minutes")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _AsofProcessor(), out_schema, "append", "None"
-        )
-    )

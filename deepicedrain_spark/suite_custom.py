@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import load_table
+from deepicedrain_spark.io import fingerprint, load_table
 from deepicedrain_spark.operators import windows as win_ops
 from deepicedrain_spark.operators.clustering import find_clusters
 from deepicedrain_spark.operators.crossover import (
@@ -47,10 +47,14 @@ def source_token(sf_dir: str, table: str, ver: str) -> str:
     """synth_once token for fixtures DERIVED FROM a testdata table
     (r12): folds the source parquet's (mtime_ns, size) into the token
     so a regenerated table rebuilds the fixture instead of silently
-    reading a stale store — same staleness rule as
-    kmeans._input_fingerprint and the lshdedup feed staging."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{ver}-{st.st_mtime_ns}-{st.st_size}"
+    reading a stale store — the same ``io.fingerprint`` that keys
+    ``io.memo``."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    fp = fingerprint([path])
+    if fp is None:
+        raise FileNotFoundError(path)
+    ((_, mtime_ns, size),) = fp
+    return f"{ver}-{mtime_ns}-{size}"
 
 
 def synth_once(path: str, make, token: str = "v1") -> str:

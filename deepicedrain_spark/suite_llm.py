@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import fence, load_table, rows_hint, spread_scan
+from deepicedrain_spark.io import fence, load_table, memo, rows_hint, spread_scan
 from deepicedrain_spark.operators import textstats as ts_ops
 from deepicedrain_spark.operators.dedup import (
     exact_duplicates,
@@ -1825,40 +1825,26 @@ def _logreg_chain() -> str:
     return "WITH " + ",\n    ".join(parts)
 
 
-# train-once memo across the train/score queries (trained_centroids
-# key shape: params + source-file content fingerprint; the checkpointed
-# feature table is cached too, keyed by application id like the
-# near-dup pair memo, since checkpoint blocks die with the session)
-_LOGREG_CACHE: dict[tuple, tuple[list[int], DataFrame]] = {}
-
-
 def _trained_logreg(spark: SparkSession, sf_dir: str) -> tuple[list[int], DataFrame]:
+    """(weights, checkpointed feature table), trained once per
+    documents fingerprint and application (``io.memo``) and shared by
+    the train/score queries."""
     from deepicedrain_spark.operators.classifier import (
         hashed_bigram_features,
         logreg_train,
     )
-    from deepicedrain_spark.operators.kmeans import _input_fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _LR_B,
-        _LR_ITERS,
-        _LR_LR,
-        _input_fingerprint(docs),
-    )
-    if key in _LOGREG_CACHE:
-        return _LOGREG_CACHE[key]
-    spread = spread_scan(docs)
-    if spread is not docs:
-        docs = fence(spread)
-    feats = hashed_bigram_features(
-        docs, F.col("lang") == "en", b=_LR_B
-    ).localCheckpoint()
-    w6 = logreg_train(feats, b=_LR_B, iters=_LR_ITERS, lr=_LR_LR)
-    _LOGREG_CACHE[key] = (w6, feats)
-    return w6, feats
+
+    def build() -> tuple[list[int], DataFrame]:
+        spread = spread_scan(docs)
+        feats = hashed_bigram_features(
+            docs if spread is docs else fence(spread), F.col("lang") == "en", b=_LR_B
+        ).localCheckpoint()
+        return logreg_train(feats, b=_LR_B, iters=_LR_ITERS, lr=_LR_LR), feats
+
+    key = ("trained_logreg", _LR_B, _LR_ITERS, _LR_LR)
+    return memo(spark, key, docs.inputFiles(), build)
 
 
 @register(

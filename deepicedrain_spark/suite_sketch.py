@@ -2872,11 +2872,10 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cache_key: the planted pool is a PURE function of the embeddings
     # table (deterministic twin construction), so Lloyd training is
-    # memoizable per source fingerprint exactly like
-    # semantic_dedup_kmeans — the fingerprint (inputFiles stat) guards
-    # staleness. cache_key=None retrained per bench pass: ~6 s of
-    # re-training per timed run that every other trainer query
-    # amortizes via the train-once memo (r12 optimization round).
+    # memoized per source fingerprint (io.memo over the pool's
+    # inputFiles) exactly like semantic_dedup_kmeans. cache_key=None
+    # retrained per bench pass: ~6 s of re-training per timed run that
+    # every other trainer query amortizes (r12 optimization round).
     out = semantic_dedup(
         pool, "vec_id", "embedding", quality_col="q",
         k=_KM_K, iters=_KM_ITERS, threshold=0.9,

@@ -203,18 +203,6 @@ def q_streaming_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASOF_TOL_US = 2 * 86_400_000_000
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas talks to the JVM state server over
-    protobuf; this container ships a broken google.protobuf, so probe
-    it cheaply instead of paying a doomed stream start."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 @register(
     "streaming_asof_join",
     f"""
@@ -234,23 +222,9 @@ def _tws_available() -> bool:
     """,
 )
 def q_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deepicedrain_spark.streaming.windows import asof_attach, asof_attach_tws
+    from deepicedrain_spark.streaming.windows import asof_attach
 
     events = read_events_stream(spark, sf_dir)
-    if _tws_available():
-        # forward path: typed ValueState in the JVM state store
-        # (transformWithStateInPandas, needs the RocksDB provider)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            return run_to_batch(
-                asof_attach_tws(events, "click", "purchase", tolerance_us=_ASOF_TOL_US),
-                "append",
-            )
-        except Exception:  # noqa: BLE001 — e.g. RocksDB provider unavailable
-            pass
     return run_to_batch(
         asof_attach(events, "click", "purchase", tolerance_us=_ASOF_TOL_US),
         "append",

@@ -57,8 +57,10 @@ def test_bpe_train_and_encode(spark):
     """Sennrich-style sanity: frequent word-internal pairs merge first,
     encode applies them leftmost-greedy, and the train memo keys on the
     source fingerprint."""
+    from deepicedrain_spark import io
     from deepicedrain_spark.operators import bpe
 
+    io.clear_memo()
     df = spark.createDataFrame(
         [
             Row(doc_id=0, text="low lower lowest low low"),
@@ -77,8 +79,8 @@ def test_bpe_train_and_encode(spark):
     assert m2 == [("a", "a")]
     got = bpe.bpe_encode(rep, m2).collect()[0]["tokens"]
     assert got == ["aa", "a", "aa", "a"]
-    # in-memory frames bypass the cache; file scans hit it
-    assert bpe._BPE_CACHE == {}
+    # in-memory frames bypass the memo; file scans hit it
+    assert io._MEMO == {}
 
 
 def _ref_bpe_train(docs: list[str], n_merges: int):
@@ -192,16 +194,17 @@ def test_duplicated_spans_matches_bruteforce(spark):
 
 
 def test_bpe_train_cache_on_files(spark, tmp_path):
+    from deepicedrain_spark import io
     from deepicedrain_spark.operators import bpe
 
     p = str(tmp_path / "d.parquet")
     spark.createDataFrame([Row(doc_id=0, text="ab ab ab")]).write.parquet(p)
-    bpe.clear_bpe_cache()
+    io.clear_memo()
     m1 = bpe.bpe_train(spark.read.parquet(p), n_merges=1)
-    assert m1 == [("a", "b")] and len(bpe._BPE_CACHE) == 1
+    assert m1 == [("a", "b")] and len(io._MEMO) == 1
     m2 = bpe.bpe_train(spark.read.parquet(p), n_merges=1)
     assert m2 is m1  # memo hit
-    bpe.clear_bpe_cache()
+    io.clear_memo()
 
 
 def test_duplicated_spans_maximal_runs(spark):
@@ -240,34 +243,35 @@ def test_minhash_pairs_memo(spark, tmp_path):
     cache; a rewritten source file invalidates the entry."""
     import time
 
+    from deepicedrain_spark import io
     from deepicedrain_spark.operators import dedup
 
     p = str(tmp_path / "docs.parquet")
     spark.createDataFrame(DOCS).write.parquet(p)
-    dedup.clear_pairs_cache()
+    io.clear_memo()
     docs = spark.read.parquet(p)
     a = dedup.minhash_near_duplicates(docs, threshold=0.5)
-    assert len(dedup._PAIRS_CACHE) == 1
+    assert len(io._MEMO) == 1
     b = dedup.minhash_near_duplicates(spark.read.parquet(p), threshold=0.5)
     assert b is a  # cache hit returns the checkpointed frame itself
     rows_a = {(r["id_a"], r["id_b"]) for r in a.collect()}
     assert (0, 1) in rows_a
     # different params -> different entry
     dedup.minhash_near_duplicates(docs, threshold=0.9)
-    assert len(dedup._PAIRS_CACHE) == 2
+    assert len(io._MEMO) == 2
     # in-memory frame: no fingerprint, no caching
     mem = spark.createDataFrame(DOCS)
     out = dedup.minhash_near_duplicates(mem, threshold=0.5)
-    assert out is not a and len(dedup._PAIRS_CACHE) == 2
+    assert out is not a and len(io._MEMO) == 2
     # rewriting the file (new mtime/size) invalidates
     time.sleep(0.05)
     spark.createDataFrame(DOCS + [Row(doc_id=9, text="the quick brown fox jumps high")]).write.mode(
         "overwrite"
     ).parquet(p)
     c = dedup.minhash_near_duplicates(spark.read.parquet(p), threshold=0.5)
-    assert c is not a and len(dedup._PAIRS_CACHE) == 3
-    dedup.clear_pairs_cache()
-    assert not dedup._PAIRS_CACHE
+    assert c is not a and len(io._MEMO) == 3
+    io.clear_memo()
+    assert not io._MEMO
 
 
 def test_simhash_identical_and_distinct(spark):

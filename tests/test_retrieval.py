@@ -481,10 +481,11 @@ def test_calibration_brier_bins(spark):
 
 
 def test_tokenizer_fertility_ratios(spark):
-    from deepicedrain_spark.operators.bpe import bpe_train, bpe_encode, clear_bpe_cache
+    from deepicedrain_spark.io import clear_memo
+    from deepicedrain_spark.operators.bpe import bpe_train, bpe_encode
     from deepicedrain_spark.operators.textstats import whitespace_tokens
 
-    clear_bpe_cache()
+    clear_memo()
     docs = spark.createDataFrame(
         [
             Row(doc_id=0, lang="en", text="abab abab cd"),
@@ -503,7 +504,7 @@ def test_tokenizer_fertility_ratios(spark):
     for lang, (nw, nb, nc) in got.items():
         assert nb >= nw
         assert nc > 0
-    clear_bpe_cache()
+    clear_memo()
 
 
 def test_orc_roundtrip_fidelity(spark, tmp_path):

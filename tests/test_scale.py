@@ -134,7 +134,8 @@ def test_trained_centroids_cache_invalidates_on_rewrite(spark, tmp_path):
     centroids after the table at a cached path is regenerated."""
     from pyspark.sql import functions as F
 
-    from deepicedrain_spark.operators.kmeans import clear_train_cache, trained_centroids
+    from deepicedrain_spark.io import clear_memo
+    from deepicedrain_spark.operators.kmeans import trained_centroids
 
     p = str(tmp_path / "emb.parquet")
 
@@ -146,7 +147,7 @@ def test_trained_centroids_cache_invalidates_on_rewrite(spark, tmp_path):
             ).alias("embedding"),
         ).coalesce(1).write.mode("overwrite").parquet(p)
 
-    clear_train_cache()
+    clear_memo()
     write(1.0)
     df1 = spark.read.parquet(p)
     _, c1 = trained_centroids(df1, "embedding", "vec_id", k=4, iters=1, cache_key=p)
