@@ -213,7 +213,19 @@ def fence(df: DataFrame, rows: int | None = None, eager: bool = True) -> DataFra
     the result with :func:`size_to`. A lazy fence (``eager=False``) is
     materialized by the first job that reads it — through a sized
     wrapper that job would run at the coalesced width — so it takes no
-    ``rows``; size it with ``size_to`` once that job has run."""
+    ``rows``; size it with ``size_to`` once that job has run.
+
+    This is the package's one way to share an intermediate between
+    consumers; free it with :func:`release`. A localCheckpoint, not
+    ``persist``/``cache``: the fence's plan is a LogicalRDD leaf, so
+    every consumer is analyzed and optimized against the leaf instead
+    of re-carrying the upstream tree (driver planning dominates many
+    small-scale walls here), and the blocks belong to this one frame.
+    A persisted plan instead registers with Spark's CacheManager,
+    which serves it to ANY later plan that matches — including a new
+    scan of the same path after the file was rewritten (stale rows)
+    — until it is unpersisted. Blocks are MEMORY_AND_DISK on the
+    executors; they do not survive the loss of an executor."""
     if rows is not None and not eager:
         raise ValueError("fence: a lazy fence cannot be sized before it is materialized")
     out = df.localCheckpoint(eager=eager)

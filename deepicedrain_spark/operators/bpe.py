@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import memo
+from deepicedrain_spark.io import fence, memo, release
 
 _WORDS = "filter(split({col}, ' '), x -> x != '')"
 
@@ -65,10 +65,10 @@ def bpe_train(
     memoized per source fingerprint (``io.memo``)."""
 
     def build() -> list[tuple[str, str]]:
-        state = word_frequencies(df, text_col).withColumn(
+        state = fence(word_frequencies(df, text_col).withColumn(
             "syms",
             F.transform(F.sequence(F.lit(1), F.length("word")), lambda i: F.col("word").substr(i, F.lit(1))),
-        ).localCheckpoint()
+        ))
         merges: list[tuple[str, str]] = []
         for _ in range(n_merges):
             pairs = (
@@ -93,7 +93,12 @@ def bpe_train(
                 break
             a, b = top[0]["a"], top[0]["b"]
             merges.append((a, b))
-            state = state.withColumn("syms", _apply_merge(F.col("syms"), a, b)).localCheckpoint()
+            merged = fence(state.withColumn("syms", _apply_merge(F.col("syms"), a, b)))
+            # merged is materialized: the previous fence is no longer read
+            release(state)
+            state = merged
+        # the result is a Python list: no frame reads the last fence
+        release(state)
         return merges
 
     return memo(df.sparkSession, ("bpe_train", text_col, n_merges), df.inputFiles(), build)

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence, release
+
 
 def dbscan_numpy(
     X: np.ndarray, eps: float, min_samples: int, return_core: bool = False
@@ -257,11 +259,10 @@ def dbscan_distributed(
         "_gid",
         F.concat_ws("_", F.col("_bx"), F.col("_by"), F.col("_local")),
     )
-    # eager checkpoint (not a bare persist): it feeds the edge collect,
-    # the gid collect AND the returned label join, and checkpoint
-    # blocks release automatically when the result is GC'd — a persist
-    # with no unpersist leaked the exploded point table per call
-    local = local.localCheckpoint(eager=True)
+    # eager fence: it feeds the edge collect, the gid collect AND the
+    # returned label join — so it is not released here: the returned
+    # frame still reads it
+    local = fence(local, eager=True)
 
     # witness edges: same point id clustered in two blocks, core in ≥1
     copies = local.select(id_col, "_gid", "_is_core")
@@ -308,29 +309,31 @@ def dbscan_distributed(
         sym = edges.select(
             F.col("src").alias("a"), F.col("dst").alias("b")
         ).unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        sym = sym.localCheckpoint(eager=True)
-        lbl = gids.withColumn("root", F.col("gid")).localCheckpoint(eager=True)
+        sym = fence(sym, eager=True)
+        lbl = fence(gids.withColumn("root", F.col("gid")), eager=True)
         while True:
             nbr = (
                 sym.join(lbl, sym["b"] == lbl["gid"])
                 .groupBy("a")
                 .agg(F.min("root").alias("nroot"))
             )
-            stepped = (
-                lbl.join(nbr, lbl["gid"] == nbr["a"], "left")
-                .select(
+            stepped = fence(
+                lbl.join(nbr, lbl["gid"] == nbr["a"], "left").select(
                     "gid",
                     "root",
                     F.least(F.col("root"), F.coalesce("nroot", "root")).alias(
                         "root_new"
                     ),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                eager=True,
             )
             changed = stepped.filter(F.col("root_new") != F.col("root")).count()
+            # stepped is materialized: the previous fence is no longer read
+            release(lbl)
             lbl = stepped.select("gid", F.col("root_new").alias("root"))
             if changed == 0:
                 break
+        release(sym)
         labels = lbl
 
     # Per-point label = min root over ALL copies, not just the home

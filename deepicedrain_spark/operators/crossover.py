@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
+
 
 def track_segments(
     df: DataFrame,
@@ -142,11 +144,11 @@ def crossover_join(
     a cell histogram (see _auto_salt) so the plan is skew-safe
     without manual tuning.
     """
-    # both join sides are the same exploded-segment table —
-    # localCheckpoint runs the lead() window + cell explode once AND
-    # truncates lineage so Catalyst doesn't re-analyze the upstream
-    # tree per join side (cold planning dominated small-SF wall time)
-    cells = _explode_cells(segments, cell).localCheckpoint()
+    # both join sides are the same exploded-segment table — the
+    # fence runs the lead() window + cell explode once and Catalyst
+    # doesn't re-analyze the upstream tree per join side (cold
+    # planning dominated small-SF wall time)
+    cells = fence(_explode_cells(segments, cell))
     if hot_cell_salt == "auto":
         hot_cell_salt = _auto_salt(cells)
     if hot_cell_salt > 1:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import memo
+from deepicedrain_spark.io import fence, memo
 from deepicedrain_spark.operators.textstats import whitespace_tokens
 
 
@@ -303,7 +303,7 @@ def jaccard_verify(
 # banding, threshold) — md5-derived permutations, no sampling — and a
 # real pipeline computes it ONCE and feeds components / PageRank /
 # keep-best / leakage-safe-split from the same edge table. Memoizing
-# the localCheckpoint'd result (io.memo: per application, source
+# the fenced result (io.memo: per application, source
 # fingerprint and params) lets those downstream queries measure THEIR
 # plan instead of re-running the shared candidate generation (same
 # rationale as kmeans.trained_centroids, VERDICT r5 task 3). The
@@ -322,15 +322,12 @@ def minhash_near_duplicates(
     exact-Jaccard verify. Output (id_a, id_b, jaccard).
 
     The shingle table feeds both the signature path and the verify
-    path — localCheckpoint materializes it once AND truncates the
-    lineage, so the signature/band/verify subtrees are planned against
-    a leaf instead of re-carrying the text-parse tree (driver planning
-    was most of this query's cold wall clock). Storage is
-    MEMORY_AND_DISK on executors, the same footprint persist() would
-    reach once hot."""
+    path, so it is fenced: the signature/band/verify subtrees are
+    planned against a leaf instead of re-carrying the text-parse tree
+    (driver planning was most of this query's cold wall clock)."""
 
     def build() -> DataFrame:
-        shingled = word_shingles(df, text_col, n).localCheckpoint()
+        shingled = fence(word_shingles(df, text_col, n))
         # docs shorter than n words have NO shingles: their signatures
         # would be 64 identical NULL slots, banding every such doc into one
         # shared bucket (|bucket|^2 candidate pairs) whose Jaccard then
@@ -341,13 +338,13 @@ def minhash_near_duplicates(
         # materialize the candidate pairs: they are tiny (O(near-dups)) but
         # Catalyst cannot know that from the banding plan, so the fused plan
         # shuffles the HEAVY shingle table into both verify joins. With the
-        # checkpoint, AQE sees the real size and broadcasts the candidates
+        # fence, AQE sees the real size and broadcasts the candidates
         # instead — measured 38.8s -> ~11s at 200k docs (BENCH_SCALE sf4),
         # restoring the ~linear sf1->sf4 ratio.
-        cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).localCheckpoint()
-        # checkpoint the (small, O(near-dups)) verified pairs so later
+        cands = fence(lsh_candidate_pairs(sigs, id_col, num_hashes, bands))
+        # fence the (small, O(near-dups)) verified pairs so later
         # callers in the same application read a materialized leaf
-        return jaccard_verify(cands, shingled, id_col, "shingles", threshold).localCheckpoint()
+        return fence(jaccard_verify(cands, shingled, id_col, "shingles", threshold))
 
     key = ("minhash_near_duplicates", text_col, id_col, n, num_hashes, bands, threshold)
     return memo(df.sparkSession, key, df.inputFiles(), build)
@@ -369,7 +366,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over the full corpus via PREFIX-FILTERED
     inverted-index candidates (AllPairs/PPJoin scheme, Bayardo et al.
@@ -391,14 +387,10 @@ def ngram_jaccard_pairs(
     at sf0.1 (a hot trigram's bucket expands quadratically); the prefix
     filter removes exactly those buckets.
 
-    ``n_docs`` is accepted for API symmetry with
-    :func:`simhash_near_pairs` but currently ignored: measurement (see
-    ``SMALL_CORPUS_DOCS``) shows the prefix filter is the faster shape
-    even at 500 docs, so there is no small-corpus branch to take."""
-    del n_docs
-    shingled = word_shingles(df, text_col, n).withColumn(
-        "_n", F.size("shingles")
-    ).localCheckpoint()  # feeds prefix build AND verify
+    The prefix filter is the faster shape even at 500 docs (see
+    ``SMALL_CORPUS_DOCS``), so there is no small-corpus branch."""
+    # feeds prefix build AND verify
+    shingled = fence(word_shingles(df, text_col, n).withColumn("_n", F.size("shingles")))
     ex = shingled.select(F.col(id_col), "_n", F.explode("shingles").alias("_s"))
     freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
     wcanon = Window.partitionBy(id_col).orderBy("_df", "_s")
@@ -586,21 +578,16 @@ def ngram_contamination(
     (lossless at the threshold), with the canonical shingle order
     computed over the UNION of both sides so prefixes are consistent.
     Output: (doc_id, bench_id, jaccard), self-pairs excluded."""
-    c_sh = word_shingles(corpus, text_col, n).withColumn(
-        "_n", F.size("shingles")
-    ).localCheckpoint()
-    b_sh = word_shingles(benchmark, text_col, n).withColumn(
-        "_n", F.size("shingles")
-    ).localCheckpoint()
+    c_sh = fence(word_shingles(corpus, text_col, n).withColumn("_n", F.size("shingles")))
+    b_sh = fence(word_shingles(benchmark, text_col, n).withColumn("_n", F.size("shingles")))
     c_ex = c_sh.select(F.col(id_col), "_n", F.explode("shingles").alias("_s"))
     b_ex = b_sh.select(F.col(id_col), "_n", F.explode("shingles").alias("_s"))
-    # freq feeds BOTH sides' prefix builds — checkpoint so the union
+    # freq feeds BOTH sides' prefix builds — fenced so the union
     # aggregation runs once, not once per side
-    freq = (
+    freq = fence(
         c_ex.select("_s").unionByName(b_ex.select("_s"))
         .groupBy("_s")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .localCheckpoint()
     )
     wcanon = Window.partitionBy(id_col).orderBy("_df", "_s")
     prefix_len = F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")).cast("int") + 1
@@ -713,7 +700,7 @@ def simhash_near_pairs(
     # the aliased sides (same lesson as winnowing_matches), so the
     # tokenize+hash+aggregate pass ran twice. O(docs) rows of
     # (id, long) — safe to materialize at any scale.
-    fps = fps.localCheckpoint(eager=False)
+    fps = fence(fps, eager=False)
     if n_docs is not None and n_docs <= SMALL_CORPUS_DOCS:
         return simhash_near_pairs_bruteforce(fps, id_col, max_hamming)
     nb = max_hamming + 1
@@ -861,15 +848,18 @@ def semantic_dedup(
     # planner does not reuse subtrees across aliased sides — the
     # map-only assignment (a k×d-literal scoring tree per row, the
     # expensive map here) executed three times. One lazy
-    # localCheckpoint runs it once; SemDeDup pipelines materialize
+    # fence runs it once; SemDeDup pipelines materialize
     # assignments anyway (the table is the corpus being pruned, the
     # same bytes the join shuffles).
-    base = assigned.select(
-        F.col(id_col).alias("_sd_id"),
-        F.col("cluster").alias("_sd_cluster"),
-        F.col(vec_col).cast("array<double>").alias("_sd_v"),
-        q_expr.alias("_sd_q"),
-    ).localCheckpoint(eager=False)
+    base = fence(
+        assigned.select(
+            F.col(id_col).alias("_sd_id"),
+            F.col("cluster").alias("_sd_cluster"),
+            F.col(vec_col).cast("array<double>").alias("_sd_v"),
+            q_expr.alias("_sd_q"),
+        ),
+        eager=False,
+    )
     # norms fold ONCE per row before the cluster-key join: inside the
     # join each side's norm would re-fold per PAIR (Σ n_c² times), a
     # 3x O(d) overhead per scored pair; sqrt(nx*ny) over the
@@ -1044,7 +1034,7 @@ def winnowing_matches(
     # planner does not reuse the exchange across the differently-
     # aliased sides). The winnowed set is ≈ 2n/(window+1) rows, a
     # fraction of the token stream, so the materialization is small.
-    fp = winnowing_fingerprints(docs, text_col, id_col, k, window).localCheckpoint()
+    fp = fence(winnowing_fingerprints(docs, text_col, id_col, k, window))
     a = fp.select(
         F.col(id_col).alias("id_a"), F.col("pos").alias("pos_a"), "fp"
     )
@@ -1169,9 +1159,10 @@ def embedding_near_duplicates_lsh(
     # consume it and the planner does not reuse the exchange across
     # the aliased sides, so the planes x dims signature projection ran
     # twice and the plan inlined it twice (r12 optimization round).
-    t = emb.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), sig.alias("_sig")
-    ).localCheckpoint(eager=False)
+    t = fence(
+        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), sig.alias("_sig")),
+        eager=False,
+    )
     a = t.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_sig").alias("sa")
     )
@@ -1264,22 +1255,21 @@ def containment_pairs(
     Output: (contained_id, container_id, containment) with rounded
     containment ≥ threshold, self-pairs excluded.
     """
-    # checkpoint BEFORE the size filter: a filter on the derived
+    # fence BEFORE the size filter: a filter on the derived
     # shingle count would sink below the projection into the scan's
     # interpreted (non-codegen) filter path, re-evaluating the whole
     # shingle expression per row — the r9/r10 "filter-on-derived-
     # count cliff" (measured +7.7 s at sf0.1 on this exact stage).
     # Filtering the materialized rows costs one cheap pass instead;
-    # the checkpoint carries only the handful of shingle-less docs
+    # the fence carries only the handful of shingle-less docs
     # extra (r12 optimization round).
     sh = (
-        word_shingles(df, text_col, n)
-        .localCheckpoint()
+        fence(word_shingles(df, text_col, n))
         .withColumn("_n", F.size("shingles"))
         .filter(F.col("_n") > 0)
     )
     ex = sh.select(F.col(id_col), "_n", F.explode("shingles").alias("_s"))
-    freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df")).localCheckpoint()
+    freq = fence(ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df")))
     wcanon = Window.partitionBy(id_col).orderBy("_df", "_s")
     prefix_len = F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")).cast("int") + 1
     a = (
@@ -1349,11 +1339,11 @@ def ngram_overlap_hits(
             "prefix prefilter reads positions i and i+1, and 1-gram "
             "decontamination is a plain token semi-join anyway"
         )
-    b = (
+    # feeds the prefix set AND the exact match
+    b = fence(
         word_shingles(benchmark, text_col, n, out="_g")
         .select(F.explode("_g").alias("_gram"))
         .distinct()
-        .localCheckpoint()  # feeds the prefix set AND the exact match
     )
     b_pre = b.select(
         F.concat(

@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
+
 
 def roc_auc(
     scored: DataFrame,
@@ -195,12 +197,11 @@ def psi_drift(
     1..buckets, psi_total repeated (window sum over the decimal-cast
     rounded contributions).
     """
-    # localCheckpoint: the edges subplan (a full groupBy over the ref
-    # slice's value domain + the ordered window) feeds BOTH bucket-count
-    # branches, and Spark re-executes un-persisted subplans per
-    # consumer — the one-row fence costs nothing and halves the ref
+    # fence: the edges subplan (a full groupBy over the ref slice's
+    # value domain + the ordered window) feeds BOTH bucket-count
+    # branches — the one-row fence costs nothing and halves the ref
     # passes (the bigram_pmi re-execution class)
-    edges = psi_ref_edges(ref, value_col, buckets).localCheckpoint()
+    edges = fence(psi_ref_edges(ref, value_col, buckets))
     r = psi_bucket_counts(ref, edges, value_col, "c_ref")
     c = psi_bucket_counts(cur, edges, value_col, "c_cur")
     return psi_from_bucket_counts(ref.sparkSession, r, c, buckets, epsilon=epsilon)

@@ -14,8 +14,8 @@ Algorithm: min-label propagation with pointer jumping. Each round
      contracts label chains so convergence needs O(log n) rounds on a
      path instead of O(n) — the same doubling idea as the
      large-star/small-star MapReduce formulation (Kiveris et al. 2014).
-Every round localCheckpoints its label table (eager) and drops the
-previous one, so each round's plan is O(1) — without truncation the
+Every round fences its label table (eager ``io.fence``) and releases
+the previous one, so each round's plan is O(1) — without truncation the
 logical plan re-carries both the whole upstream edge-producing subtree
 and every earlier round.
 """
@@ -47,10 +47,9 @@ def connected_components(
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id in the component (stable,
     engine-independent)."""
-    # localCheckpoint (not persist): every round's plan would otherwise
-    # re-carry the upstream edge-producing subtree (e.g. a full
-    # minhash pipeline), and per-round driver planning dominates on
-    # small graphs
+    # fence: every round's plan would otherwise re-carry the upstream
+    # edge-producing subtree (e.g. a full minhash pipeline), and
+    # per-round driver planning dominates on small graphs
     sym = fence(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -149,7 +148,7 @@ def pagerank(
     cross-engine fp accumulation (~1e-16/term) cannot compound across
     rounds — the same drift-pinning trick as kmeans.updated_centroids.
 
-    Every round localCheckpoints the O(nodes) rank table, keeping the
+    Every round fences the O(nodes) rank table, keeping the
     per-round plan O(1) like connected_components above.
     """
     e = fence(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence, release
 from deepicedrain_spark.region import Region
 
 
@@ -64,12 +65,12 @@ def interpolate_grid(
         )
 
     # 1. block-median per cell (reduces points → cells).
-    # localCheckpoint: this full point-table scan+shuffle feeds med,
-    # mad AND the halo — without materialization it re-runs 3x per
-    # action (it is the most expensive stage of the plan)
+    # fence: this full point-table scan+shuffle feeds med, mad AND
+    # the halo — without materialization it re-runs 3x per action (it
+    # is the most expensive stage of the plan)
     cx = F.floor((F.col(x) - F.lit(region.xmin)) / F.lit(spacing)).alias("cx")
     cy = F.floor((F.col(y) - F.lit(region.ymin)) / F.lit(spacing)).alias("cy")
-    cells = (
+    cells = fence(
         region.subset(df, x, y)
         .groupBy(*keys, cx, cy)
         .agg(
@@ -77,7 +78,6 @@ def interpolate_grid(
             F.expr(f"percentile({y}, 0.5D)").alias("my"),
             F.expr(f"percentile({z}, 0.5D)").alias("mz"),
         )
-        .localCheckpoint()
     )
 
     # clip limits: median ± k·MAD of the cell medians (GMT L option)
@@ -220,7 +220,7 @@ def tension_spline_grid(
     Shuffle profile: points→cells is one partial-agg shuffle; each
     Jacobi iteration is a stencil equi-join + 12-slot gather groupBy on
     the GRID (orders of magnitude smaller than the point table);
-    ``batch`` iterations compose lazily between localCheckpoints. The
+    ``batch`` iterations compose lazily between fences. The
     12 neighbor contributions aggregate into separate single-element
     slots and combine in a fixed expression order, so results are
     deterministic and engine-reproducible.
@@ -238,7 +238,10 @@ def tension_spline_grid(
 
     cx = F.floor((F.col(x) - F.lit(region.xmin)) / F.lit(spacing)).alias("gx")
     cy = F.floor((F.col(y) - F.lit(region.ymin)) / F.lit(spacing)).alias("gy")
-    cells = (
+    # fence: the point-table percentile aggregation feeds med, lim,
+    # the relaxation base AND the final mask — without it it re-runs
+    # up to 5x per action
+    cells = fence(
         region.subset(df, x, y)
         .groupBy(cx, cy)
         .agg(F.expr(f"percentile({z}, 0.5D)").alias("mz"))
@@ -246,10 +249,6 @@ def tension_spline_grid(
             (F.col("gx") >= 0) & (F.col("gx") < nx)
             & (F.col("gy") >= 0) & (F.col("gy") < ny)
         )
-        # materialize: the point-table percentile aggregation feeds
-        # med, lim, the relaxation base AND the final mask — without
-        # this it re-runs up to 5x per action
-        .localCheckpoint()
     )
     med = cells.agg(F.expr("percentile(mz, 0.5D)").alias("m"))
     lim = (
@@ -268,15 +267,14 @@ def tension_spline_grid(
             (F.col("id") % ny).alias("gy"),
         )
     )
-    base = (
-        nodes.join(F.broadcast(cells), ["gx", "gy"], "left")
-        .select(
+    base = fence(
+        nodes.join(F.broadcast(cells), ["gx", "gy"], "left").select(
             "gx",
             "gy",
             F.col("mz").isNotNull().alias("is_data"),
             F.coalesce("mz", F.lit(0.0)).alias("zd"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
     if nx * ny <= dense_cells:
@@ -373,14 +371,17 @@ def tension_spline_grid(
         )
 
     grid = base.select("gx", "gy", F.col("zd").alias("zv"))
+    prev = None  # the previous batch's fence (base is read by every batch)
     done = 0
     while done < iters:
         for _ in range(min(batch, iters - done)):
             grid = one_iter(grid)
         done += min(batch, iters - done)
-        old = grid
-        grid = grid.localCheckpoint(eager=True)
-        del old
+        grid = fence(grid, eager=True)
+        # grid is materialized: the previous fence is no longer read
+        if prev is not None:
+            release(prev)
+        prev = grid
 
     return _spline_finish(grid, cells, lim, nx, ny, mask_cells, clip_mad)
 

@@ -80,7 +80,7 @@ def covariance_long(
     pidx→sum map row, and every covariance entry is computed from
     that one row by exploding the literal d² index grid. A join-based
     assembly would re-execute the whole moment pass once per joined
-    branch (Spark does not share un-persisted subplans), turning a
+    branch (Spark does not share un-fenced subplans), turning a
     one-pass algorithm into four passes at 100 TB."""
     d = int(dims)
     packed = _reduced_moments(df, vec_col, d).agg(

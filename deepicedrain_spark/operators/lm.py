@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
 from deepicedrain_spark.operators.textstats import whitespace_tokens
 
 KN_DISCOUNT = 0.75
@@ -73,11 +74,11 @@ def kneser_ney_score(
     are absent (no bigrams), matching q_bigram_lm_score's convention.
     """
     bg = doc_bigrams(docs, id_col, text_col)
-    # localCheckpoint: bgc feeds FOUR consumers (the three model tables
+    # fence: bgc feeds FOUR consumers (the three model tables
     # and the scoring join) — without the fence each broadcast subtree
     # re-runs the corpus bigram explode (the DSIR one-pass lesson);
     # bgc is vocabulary²-bounded on real corpora, so the fence is cheap
-    bgc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    bgc = fence(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")))
     # per-w1: total count and distinct continuations (one pass over bgc)
     left = bgc.groupBy("w1").agg(
         F.sum("c").alias("tot"), F.count(F.lit(1)).alias("follow")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
 from deepicedrain_spark.operators.textstats import whitespace_tokens
 
 
@@ -65,12 +66,11 @@ def bm25_topk(
     )
     # one corpus shuffle: exact term frequencies per document, then the
     # document length as a window over the SAME doc-partitioned rows.
-    # localCheckpoint: the postings feed THREE consumers (corpus stats,
-    # per-term df, the scoring stream) and Spark re-executes un-persisted
-    # subplans per consumer — without the fence this plan explodes the
-    # corpus three times (the DSIR one-pass lesson)
+    # fence: the postings feed THREE consumers (corpus stats, per-term
+    # df, the scoring stream) — without the fence this plan explodes
+    # the corpus three times (the DSIR one-pass lesson)
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id"))).localCheckpoint()
+    tf = fence(tf.withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id"))))
 
     # corpus stats: dl sums are exact integers, and avgdl is spelled
     # sum/count (not avg()) so both engines divide the same exact sum
@@ -169,13 +169,13 @@ def mmr_select(
     pool = pool.select(id_col, rel_col, vec_col)
     if prune:
         pool = pool.orderBy(F.col(rel_col).desc(), F.col(id_col)).limit(max_pool)
-    # limit BEFORE the (eager) localCheckpoint: the checkpoint itself
-    # would otherwise materialize an oversized pool executor-side
-    # before the guard ever ran. When the guard passes, limit(max_pool
-    # + 1) returned ALL rows, so the checkpointed frame is the whole
-    # pool; the checkpoint still fences the two consumers (driver
-    # collect + output value join) against subplan re-execution.
-    pool = pool.limit(max_pool + 1).localCheckpoint()
+    # limit BEFORE the (eager) fence: the fence itself would
+    # otherwise materialize an oversized pool executor-side before the
+    # guard ever ran. When the guard passes, limit(max_pool + 1)
+    # returned ALL rows, so the fenced frame is the whole pool; the
+    # fence still shields the two consumers (driver collect + output
+    # value join) from subplan re-execution.
+    pool = fence(pool.limit(max_pool + 1))
     # bounded collect: at most max_pool + 1 rows reach the driver, so
     # the oversize guard fires BEFORE an oversized pool materializes
     # anywhere (≤ max_pool rows means the limit returned ALL rows)

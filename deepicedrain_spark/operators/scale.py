@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
+
 # agg name -> (partial expr builder, final recombine builder)
 _ALGEBRAIC = {
     "sum": (lambda c: F.sum(c), lambda p: F.sum(p)),
@@ -135,7 +137,7 @@ def positional_index(
     ``order_cols`` must be a TOTAL order (no ties) for the index to be
     deterministic — same contract the single-partition version had.
 
-    The partitioned frame is materialized ONCE (localCheckpoint)
+    The partitioned frame is materialized ONCE (``io.fence``)
     before both consumers: RangePartitioner samples its boundaries
     per-execution (reservoir sample seeded by the RDD id), so without
     pinning, the counts job and the returned DataFrame could see
@@ -143,10 +145,9 @@ def positional_index(
     frozen offsets would then duplicate or skip idx values. Small
     data can't catch that; the checkpoint makes both jobs read the
     same physical partitioning by construction."""
-    part = (
-        df.repartitionByRange(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    part = fence(
+        df.repartitionByRange(*order_cols).withColumn("_pid", F.spark_partition_id()),
+        eager=True,
     )
     from pyspark.sql import Window
 

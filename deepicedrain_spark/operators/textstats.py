@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
+
 # ASCII-explicit classes so JVM and DuckDB regex semantics agree.
 WORD_RE = "[A-Za-z0-9_]+|[^A-Za-z0-9_ ]"
 PUNCT_CLASS = "[^.,;:!?]"
@@ -228,11 +230,7 @@ def tfidf_top_terms(
     # consume it, so the corpus token explode + (doc, term) count
     # shuffle ran twice (r12 optimization round). One row per distinct
     # (doc, term) — the same table the scoring join shuffles anyway.
-    tf = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("_tf"))
-        .localCheckpoint(eager=False)
-    )
+    tf = fence(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("_tf")), eager=False)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = df.select(F.count(F.lit(1)).alias("_n"))
     scored = (
@@ -291,8 +289,8 @@ def entropy_features(
     (explode → count) and bigrams (re-split → transform → explode →
     count) — each pruned to (id, text) at the scan, then rejoined on
     doc_id. Sharing one tokenized projection would need a
-    corpus-sized cache/checkpoint of the token arrays (Spark re-runs
-    an unpersisted subplan per consumer), so two pruned scans are the
+    corpus-sized fence of the token arrays (Spark re-runs an unfenced
+    subplan per consumer), so two pruned scans are the
     cheaper shape at 100 TB. Both count aggregations shuffle on
     (doc, term) — vocabulary-bounded combiner output. Documents with
     < 2 tokens carry NULL bigram_cond_entropy (LEFT join, no bigrams).
@@ -378,13 +376,12 @@ def bigram_pmi(
     orders by (pmi DESC, w1, w2). Output: (w1, w2, cb, pmi, rank).
     """
     toks = df.select(F.explode(whitespace_tokens(F.col(text_col))).alias("tok"))
-    # localCheckpoint: the unigram counts feed THREE consumers (total,
-    # w1 join, w2 join) and the bigram counts two (total, scoring) —
-    # Spark re-executes un-persisted subplans per consumer, so without
+    # fences: the unigram counts feed THREE consumers (total, w1 join,
+    # w2 join) and the bigram counts two (total, scoring) — without
     # the fences the corpus explodes 3x/2x (sf1/sf4 probe measured
     # 13.7x wall for 4x data; 4.0x after). Both tables are
     # model-sized: vocabulary / observed-bigram bounded.
-    uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    uni = fence(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
     # totals computed from the vocab-bounded count table, not the corpus
     u_tot = uni.agg(F.sum("c").cast("long").alias("u"))
     bg = (
@@ -401,7 +398,7 @@ def bigram_pmi(
         )
         .select("b.w1", "b.w2")
     )
-    bgc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")).localCheckpoint()
+    bgc = fence(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")))
     b_tot = bgc.agg(F.sum("cb").cast("long").alias("bt"))
     scored = (
         bgc.filter(F.col("cb") >= min_count)
@@ -443,9 +440,9 @@ def _slice_term_counts(df: DataFrame, by: str, text_col: str):
         F.col(by).alias("_s"),
         F.explode(whitespace_tokens(F.col(text_col))).alias("term"),
     )
-    # localCheckpoint: the counts feed every model table AND the
-    # scoring join - fence so the corpus explodes once
-    sc = toks.groupBy("_s", "term").agg(F.count(F.lit(1)).alias("a")).localCheckpoint()
+    # the counts feed every model table AND the scoring join - fence
+    # so the corpus explodes once
+    sc = fence(toks.groupBy("_s", "term").agg(F.count(F.lit(1)).alias("a")))
     tot_term = sc.groupBy("term").agg(F.sum("a").cast("long").alias("t"))
     tot_slice = sc.groupBy("_s").agg(
         F.sum("a").cast("long").alias("n_s"),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import fence, rows_hint
+from deepicedrain_spark.io import fence, release, rows_hint
 from deepicedrain_spark.operators.clustering import find_clusters_signed
 from deepicedrain_spark.operators.filters import adaptive_median_filter, magnitude_filter
 from deepicedrain_spark.operators.spatial import (
@@ -82,10 +82,9 @@ def lake_attributes_and_significance(
     input-row upper bound, e.g. ``io.rows_hint``) and sizes the fences
     (``io.fence``); None leaves them at their producing stage's width."""
     # the cluster table is the root of FOUR downstream subtrees (stats,
-    # hulls→rings, two donut passes). localCheckpoint (not persist):
-    # besides running the PIP-join + DBSCAN chain once, it TRUNCATES
-    # the lineage, so Catalyst analyzes each subtree against a tiny
-    # LogicalRDD instead of re-carrying the whole upstream tree —
+    # hulls→rings, two donut passes). The fence runs the PIP-join +
+    # DBSCAN chain once, and Catalyst analyzes each subtree against a
+    # tiny leaf instead of re-carrying the whole upstream tree —
     # driver planning time dominated this query's wall clock. members
     # is the post-threshold active set (a small fraction of the input
     # by construction), so executor-local storage holds it at scale.
@@ -189,16 +188,17 @@ def find_lakes(
     """Full pipeline: PIP basins → filters → signed DBSCAN → hulls +
     donut significance → lake attribute table.
 
-    The big intermediates (the labeled point table, the donut point
-    sets inside lake_attributes_and_significance) are cached because
-    multiple aggregation passes read them; the RESULT is an O(lakes)
-    table, so it is eagerly materialized here and the point-table cache
-    released before returning — repeated find_lakes calls (per region /
-    epoch) do not accumulate executor storage. Every fence is sized
-    from ``io.rows_hint(points)`` (parquet footers, no job)."""
+    The labeled point table is fenced lazily because the cluster path
+    and the donut all_points scan both read it; the RESULT is an
+    O(lakes) table, so it is eagerly materialized here and the
+    point-table fence released before returning — repeated find_lakes
+    calls (per region / epoch) do not accumulate executor storage.
+    Every sized fence is sized from ``io.rows_hint(points)`` (parquet
+    footers, no job)."""
     rows = rows_hint(points)
-    # labeled feeds both the cluster path and the donut all_points scan
-    labeled = label_basins(points, basins).persist()
+    # labeled feeds both the cluster path and the donut all_points scan;
+    # the first job that reads it materializes it
+    labeled = fence(label_basins(points, basins), eager=False)
     try:
         clustered = find_lake_clusters(
             labeled, basin_col, eps=eps, min_samples=min_samples
@@ -208,7 +208,7 @@ def find_lakes(
         )
         out = fence(out, rows)
     finally:
-        labeled.unpersist()
+        release(labeled)
     return out
 
 

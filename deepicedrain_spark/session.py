@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_heap() -> str:
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**20
+    return f"{min(half_mb, 32 * 1024)}m"
+
+
 def get_spark(app_name: str = "deepicedrain-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
@@ -46,8 +51,11 @@ def get_spark(app_name: str = "deepicedrain-spark", cpus: int | None = None) -> 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local[N] puts driver + all executor threads in ONE JVM, so the
         # heap must hold the whole suite's shuffle/broadcast state; 8g
-        # GC-thrashed (the full bench ran 3.9x slower than with 32g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # GC-thrashed (the full bench ran 3.9x slower than with 32g).
+        # The default is half of physical RAM, capped at 32g: a heap
+        # above the host's memory lets GC defer until the kernel's OOM
+        # killer ends this JVM or a neighbour.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_heap()))
         # 68 distinct queries generate hundreds of whole-stage-codegen
         # classes; the JVM default 240m code cache fills mid-suite, the
         # JIT shuts off, and late queries run interpreted (3-5x slower

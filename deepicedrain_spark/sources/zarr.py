@@ -305,7 +305,7 @@ def write_zarr(
             raise TypeError(f"write_zarr: unsupported column type {c}:{dtypes[c]}")
         np_dtypes[c] = _SPARK_TO_NP[dtypes[c]]
 
-    # localCheckpoint pins ONE materialization with FIXED partitions:
+    # the fence pins ONE materialization with FIXED partitions:
     # the count pass and the index pass would otherwise be two
     # independent jobs over a possibly nondeterministic upstream plan
     # (shuffle order, AQE coalesce, sample), silently corrupting the

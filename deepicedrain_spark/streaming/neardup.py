@@ -73,6 +73,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deepicedrain_spark.io import fence
 from deepicedrain_spark.operators.dedup import (
     band_hash_array,
     minhash_sig_from_hashes,
@@ -312,7 +313,9 @@ def near_dup_gate(
             )
             .withColumn("n", F.size("hs").cast("long"))
         )
-        prep = (
+        # ONE eager fence per batch: every downstream consumer
+        # (candidate join, verify, state append) reads this
+        prep = fence(
             with_minhash_sig_arrow(prep, "hs", num_hashes, out="_sig")
             .withColumn(
                 "bands",
@@ -321,10 +324,8 @@ def near_dup_gate(
                     band_hash_array(F.col("_sig"), num_hashes, bands),
                 ).otherwise(F.array().cast("array<long>")),
             )
-            .drop("_sig")
-            # ONE eager pin per batch: every downstream consumer
-            # (candidate join, verify, state append) reads this
-            .localCheckpoint(eager=True)
+            .drop("_sig"),
+            eager=True,
         )
 
         def explode_bands(df: DataFrame) -> DataFrame:
@@ -364,7 +365,7 @@ def near_dup_gate(
         # index side grows with ingested history, so broadcast the
         # batch side (broadcast_batch=True): the state/index side then
         # NEVER shuffles, in flat mode too — without the hint the
-        # localCheckpoint leaves both sides with unknown size stats and
+        # fence leaves both sides with unknown size stats and
         # Spark sort-merge-joins, re-shuffling the ENTIRE accumulated
         # index every batch (O(history) per batch, the cost profile
         # the gate exists to avoid). Pass broadcast_batch=False when

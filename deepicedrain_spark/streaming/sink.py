@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from deepicedrain_spark.fslock import PathLock
+from deepicedrain_spark.io import fence
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -387,12 +388,12 @@ def apply_upsert_batch_bucketed(
         w = Window.partitionBy(*key_cols).orderBy(
             *[F.col(c).desc_nulls_last() for c in order_cols]
         )
-        batch_last = (
+        # fenced so AQE sees its size and broadcasts it below
+        batch_last = fence(
             batch_df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
             .withColumn("_b", bcol)
-            .localCheckpoint()  # sized so AQE broadcasts it below
         )
         touched = sorted(r["_b"] for r in batch_last.select("_b").distinct().collect())
         new_version = manifest["version"] + 1

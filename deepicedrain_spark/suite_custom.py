@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.io import fingerprint, load_table
+from deepicedrain_spark.io import fence, fingerprint, load_table
 from deepicedrain_spark.operators import windows as win_ops
 from deepicedrain_spark.operators.clustering import find_clusters
 from deepicedrain_spark.operators.crossover import (
@@ -3133,13 +3133,12 @@ def q_lake_catalog_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("basin_name").orderBy(
         F.element_at("xs", 1), F.element_at("ys", 1)
     )
-    polys = (
+    # 193 rows feeding ~8 self-join branches: fence once so the
+    # multiLine JSON scan doesn't re-execute per branch
+    polys = fence(
         df.select(F.col("poly_id").alias("basin_name"), "xs", "ys")
         .withColumn("pid", F.row_number().over(w).cast("long"))
-        # 193 rows feeding ~8 self-join branches: checkpoint once so the
-        # multiLine JSON scan doesn't re-execute per branch
         .coalesce(1)
-        .localCheckpoint()
     )
     stats = dissolve_stats(polys, ["basin_name"], pid="pid")
     return stats.select(
@@ -3235,9 +3234,9 @@ def _register_dissolve_snapped() -> None:
         )
         # round 8: the snap pre-pass is now a dissolve_stats parameter
         # (snap=0.01) instead of a composition callers must remember;
-        # checkpoint the noisy frame so the two overlay passes don't
+        # fence the noisy frame so the two overlay passes don't
         # recompute the noise transforms (tiny data, lineage cut only)
-        noisy = noisy.coalesce(1).localCheckpoint()
+        noisy = fence(noisy.coalesce(1))
         stats = dissolve_stats(noisy, ["basin_name"], pid="pid", snap=0.01)
         return stats.select(
             "basin_name",
@@ -3693,12 +3692,11 @@ def q_lake_region_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("basin_name").orderBy(
         F.element_at("xs", 1), F.element_at("ys", 1)
     )
-    polys = (
+    polys = fence(
         df.filter(F.col("poly_id") == "Whillans")
         .select(F.col("poly_id").alias("basin_name"), "xs", "ys")
         .withColumn("pid", F.row_number().over(w).cast("long"))
         .coalesce(1)
-        .localCheckpoint()
     )
     # fully lazy single-action assembly (VERDICT r5 task 7 — was
     # count()×3 + first(), four driver actions): every scalar is a
@@ -3823,9 +3821,9 @@ def q_dissolve_input_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r"),
     ).select("k", "r.*")
     # 15 tiny rows feeding ~8 self-join branches of the overlay: pin
-    # one partition + checkpoint so every branch reuses the same
+    # one partition + fence so every branch reuses the same
     # materialized fixture (same pattern as lake_catalog_dissolve)
-    rings = rings.coalesce(1).localCheckpoint()
+    rings = fence(rings.coalesce(1))
     st = dissolve_stats(rings, ["k"], pid="pid")
     return st.select("k", "n_polys", "n_parts", "union_area", "sum_part_area").orderBy(
         "k"

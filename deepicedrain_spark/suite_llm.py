@@ -130,11 +130,9 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered AllPairs at scale; below the banding break-even
-    the parquet-footer row count flips the op to its small-corpus
-    inverted-index path (identical, lossless result set)."""
+    """Prefix-filtered AllPairs at every corpus size (lossless)."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"))  # 1-split scan, CPU-heavy text pass (io.spread_scan: no-op at scale)
-    return ngram_jaccard_op(docs, threshold=0.5, n_docs=rows_hint(docs))
+    return ngram_jaccard_op(docs, threshold=0.5)
 
 
 # --- benchmark contamination (cross-corpus n-gram Jaccard) ------------
@@ -972,25 +970,28 @@ def q_temperature_mixture_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w6").alias("sw"),
         (F.sum("c").cast("long") / 2).cast("long").alias("target"),
     )
-    # divide FIRST in double: target * w6 in BIGINT wraps silently
-    # past 2^63 (target ~ N/2, w6 ~ sqrt(c)*1e6 at 100 TB counts);
-    # target * (w6/sw) keeps every intermediate in double and the
-    # oracle computes the identical IEEE expression order
-    quota = w.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "c",
-        F.least(
-            F.col("c"),
-            F.round(
-                F.col("target").cast("double")
-                * (F.col("w6").cast("double") / F.col("sw").cast("double"))
-            ).cast("long"),
-        ).alias("q"),
-        # quota feeds BOTH the kept-join and the final left join —
-        # unfenced, the corpus count pass under it ran twice per plan.
-        # The table is one row per source (mixture-bounded), so the
-        # checkpoint is O(sources) (r12 optimization round, §5.4).
-    ).localCheckpoint(eager=False)
+    # quota feeds BOTH the kept-join and the final left join —
+    # unfenced, the corpus count pass under it ran twice per plan.
+    # The table is one row per source (mixture-bounded), so the
+    # fence is O(sources) (r12 optimization round, §5.4).
+    quota = fence(
+        w.crossJoin(F.broadcast(tot)).select(
+            "source",
+            "c",
+            # divide FIRST in double: target * w6 in BIGINT wraps silently
+            # past 2^63 (target ~ N/2, w6 ~ sqrt(c)*1e6 at 100 TB counts);
+            # target * (w6/sw) keeps every intermediate in double and the
+            # oracle computes the identical IEEE expression order
+            F.least(
+                F.col("c"),
+                F.round(
+                    F.col("target").cast("double")
+                    * (F.col("w6").cast("double") / F.col("sw").cast("double"))
+                ).cast("long"),
+            ).alias("q"),
+        ),
+        eager=False,
+    )
     rk = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -1123,7 +1124,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first corpus pass below avoids pushable heavy filters (the kmv
     # r9 finding — explode() infers a size>0 filter that sinks below
     # the exchange into the lone scan task; the CASE WHEN guard +
-    # explode_outer shape infers nothing, so no localCheckpoint fence
+    # explode_outer shape infers nothing, so no fence
     # and no build-time materialization job per bench pass).
     # Survivor tables are bounded by the corpus row count, which sizes
     # the three stage fences below.
@@ -1169,7 +1170,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_docs,
     )
     wd = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    # localCheckpoint fences (r12 optimization round): d feeds the LM
+    # stage fences (r12 optimization round): d feeds the LM
     # bigram/unigram/vocab subtrees AND stage_counts, p feeds quota,
     # ranked AND stage_counts — un-fenced, every consumer re-executed
     # the whole upstream text pass (gopher metrics ran ~4x, the LM
@@ -1536,9 +1537,9 @@ def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the vocab leaf: without it Catalyst collapses the
     # (large) fold projection into the explode's consumers and
     # re-evaluates it per output token — measured 11.0 s vs 0.5 s at
-    # sf0.1. The checkpoint is the distributed vocab table, tiny
+    # sf0.1. The fence is the distributed vocab table, tiny
     # relative to the corpus at any scale.
-    vocab = word_frequencies(docs).localCheckpoint()
+    vocab = fence(word_frequencies(docs))
     enc = bpe_encode(vocab, merges, text_col="word")
     return (
         enc.select("freq", F.explode("tokens").alias("token"))
@@ -1826,7 +1827,7 @@ def _logreg_chain() -> str:
 
 
 def _trained_logreg(spark: SparkSession, sf_dir: str) -> tuple[list[int], DataFrame]:
-    """(weights, checkpointed feature table), trained once per
+    """(weights, fenced feature table), trained once per
     documents fingerprint and application (``io.memo``) and shared by
     the train/score queries."""
     from deepicedrain_spark.operators.classifier import (
@@ -1838,9 +1839,9 @@ def _trained_logreg(spark: SparkSession, sf_dir: str) -> tuple[list[int], DataFr
 
     def build() -> tuple[list[int], DataFrame]:
         spread = spread_scan(docs)
-        feats = hashed_bigram_features(
+        feats = fence(hashed_bigram_features(
             docs if spread is docs else fence(spread), F.col("lang") == "en", b=_LR_B
-        ).localCheckpoint()
+        ))
         return logreg_train(feats, b=_LR_B, iters=_LR_ITERS, lr=_LR_LR), feats
 
     key = ("trained_logreg", _LR_B, _LR_ITERS, _LR_LR)

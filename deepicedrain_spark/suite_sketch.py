@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from deepicedrain_spark.io import load_table, spread_scan
+from deepicedrain_spark.io import fence, load_table, spread_scan
 from deepicedrain_spark.operators.dedup import normalize_text
 from deepicedrain_spark.operators.kmeans import (
     assign_to_centroids,
@@ -111,10 +111,8 @@ def q_bloom_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the honest 100 TB trade is one extra map-only normalize pass
     # over B rather than holding a corpus-sized non-reliable
     # checkpoint (lineage-truncated state dies with an executor).
-    a_keys = (
-        a.select(normalize_text(F.col("text")).alias("nt"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    a_keys = fence(
+        a.select(normalize_text(F.col("text")).alias("nt")).distinct(), eager=False
     )
     bn = b.select("doc_id", normalize_text(F.col("text")).alias("nt"))
     bits = bloom_bits(a_keys, F.col("nt"), k=_BLOOM_K, m=_BLOOM_M)
@@ -171,11 +169,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fence the exact-count table: the estimate probe and the final
     # join both consume it, so the corpus token explode + count
     # shuffle ran twice (r12 optimization round). Vocabulary-sized.
-    exact = (
-        toks.groupBy("t")
-        .agg(F.count(F.lit(1)).alias("exact_cnt"))
-        .localCheckpoint(eager=False)
-    )
+    exact = fence(toks.groupBy("t").agg(F.count(F.lit(1)).alias("exact_cnt")), eager=False)
     est = cms_estimate(exact.select("t"), sketch, "t", d=_CMS_D, w=_CMS_W)
     return (
         est.join(exact, "t")
@@ -534,10 +528,9 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame both consume it, so the brute-force cosine scan (the
     # expensive pass here) executed twice (r12 optimization round).
     # k x n_queries rows — trivially safe to materialize.
-    exact = (
-        cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=3)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
+    exact = fence(
+        cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=3).select("query_id", "cand_id"),
+        eager=False,
     )
     ivf = q_ivf_topk_trained(spark, sf_dir).select("query_id", "cand_id")
     hit = exact.join(ivf, ["query_id", "cand_id"], "left_semi")
@@ -972,7 +965,7 @@ def q_kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluates the whole shingle expression in the lone scan task
     # (bare repartition 15-20 s at sf0.1). explode_outer() infers no
     # such filter, so the heavy map stays above the spread — and it
-    # beats the r8 eager-localCheckpoint fence (min 1.95 s vs 2.28 s)
+    # beats the r8 eager fence (min 1.95 s vs 2.28 s)
     # while adding no build-time job and no executor-storage residue
     # across a long benched session (the r8 driver's 9.49 s line)
     docs = spread_scan(docs)
@@ -983,13 +976,13 @@ def q_kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", md5_long60(F.col("s")).alias("h"))
     )
     # ONE distinct (source, h) pass feeds BOTH the sketch ranks and
-    # the exact-count audit. cache() is what actually shares it:
+    # the exact-count audit. The lazy fence is what actually shares it:
     # exchange reuse does NOT fire here because column pruning gives
     # the audit branch a narrower (and thus non-identical) subplan.
-    # State is O(distinct)×16B with disk spill — the audit branch is
-    # a test-time diagnostic; the production est-only call drops it.
-    pairs = (
-        sh.groupBy("source", "h").agg(F.count(F.lit(1)).alias("_n")).drop("_n").cache()
+    # State is O(distinct)×16B — the audit branch is a test-time
+    # diagnostic; the production est-only call drops it.
+    pairs = fence(
+        sh.groupBy("source", "h").agg(F.count(F.lit(1)).alias("_n")).drop("_n"), eager=False
     )
     minima = kmv_minima_hashed(pairs, ["source"], k=_KMV_K)
     est = kmv_estimate(minima, ["source"], k=_KMV_K)
@@ -1884,11 +1877,11 @@ def q_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fence the exact side (same rationale as ann_recall_at_k): the
     # semi-join and the roll-up frame both consumed the brute-force L2
     # scan. k x n_queries rows.
-    exact = (
+    exact = fence(
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 3)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
+        .select("query_id", "cand_id"),
+        eager=False,
     )
     ivf = q_ivfpq_topk(spark, sf_dir).select("query_id", "cand_id")
     hits = exact.join(ivf, ["query_id", "cand_id"], "left_semi").groupBy(
@@ -2336,10 +2329,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepicedrain_spark.operators.dedup import minhash_near_duplicates
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_near_duplicates(docs, threshold=0.8)
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .localCheckpoint(eager=True)
+    edges = fence(
+        minhash_near_duplicates(docs, threshold=0.8).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        ),
+        eager=True,
     )
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
@@ -2388,19 +2382,21 @@ def q_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage table feeds BOTH the next stage's join and its own
     # count — unfenced, the v→c→p chain re-executes per consumer
     # (events scanned 6x in one plan; the nc count re-ran the whole
-    # v→c join). Lazy localCheckpoints make each stage run once; the
+    # v→c join). Lazy fences make each stage run once; the
     # tables are per-user minima, the bounded state a funnel keeps
     # anyway (r12 optimization round, guide §2.4/§5.4).
-    v = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("t").alias("t_view")
-    ).localCheckpoint(eager=False)
-    c = (
+    v = fence(
+        ev.where(F.col("event_type") == "view").groupBy("user_id").agg(F.min("t").alias("t_view")),
+        eager=False,
+    )
+    c = fence(
         ev.where(F.col("event_type") == "click")
         .join(v, "user_id")
         .where(F.col("t") >= F.col("t_view"))
         .groupBy("user_id")
-        .agg(F.min("t").alias("t_click"))
-    ).localCheckpoint(eager=False)
+        .agg(F.min("t").alias("t_click")),
+        eager=False,
+    )
     p = (
         ev.where(F.col("event_type") == "purchase")
         .join(c, "user_id")
@@ -2471,9 +2467,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization round — the plan carried the documents scan 4x).
     # Materialized it is model-sized (one row per distinct bigram),
     # strictly smaller than the explode it replaces.
-    bgc = bg.groupBy("b").agg(F.count(F.lit(1)).alias("nb")).localCheckpoint(
-        eager=False
-    )
+    bgc = fence(bg.groupBy("b").agg(F.count(F.lit(1)).alias("nb")), eager=False)
     ugc = (
         bgc.select(F.split(F.col("b"), " ").getItem(0).alias("u"), "nb")
         .groupBy("u")
@@ -2574,9 +2568,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the unigram roll-up and the scoring join each re-ran the corpus
     # explode + count shuffle). Distributed materialization, NOT a
     # broadcast — bgc grows with the data (see the join note below).
-    bgc = bg.groupBy("b").agg(F.count(F.lit(1)).alias("nb")).localCheckpoint(
-        eager=False
-    )
+    bgc = fence(bg.groupBy("b").agg(F.count(F.lit(1)).alias("nb")), eager=False)
     ugc = (
         bgc.select(F.split(F.col("b"), " ").getItem(0).alias("u"), "nb")
         .groupBy("u")

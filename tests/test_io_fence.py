@@ -1,16 +1,31 @@
 """io's fence-and-size layer: rows_hint, spread_scan, fence, release."""
 
+import ast
+import os
+import pathlib
+import shutil
+import sys
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from deepicedrain_spark import io
 from deepicedrain_spark.io import fence, load_table, release, rows_hint, spread_scan
 
 from conftest import SF_MED
 
+PACKAGE = pathlib.Path(io.__file__).parent
+MATERIALIZERS = {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
+
 
 def _persistent(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _stored(spark) -> int:
+    """RDDs holding at least one materialized block."""
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
 def _write(path, n_rows: int, row_group_size: int) -> str:
@@ -33,6 +48,17 @@ def test_release_frees_fence_and_sized_wrapper(spark):
     assert _persistent(spark) == base + 1
     release(sized)
     assert _persistent(spark) == base
+
+    # a lazy fence holds no blocks until the first job that reads it
+    stored = _stored(spark)
+    lazy = fence(df, eager=False)
+    assert _stored(spark) == stored
+    assert lazy.count() == 100
+    assert _stored(spark) == stored + 1
+    assert _persistent(spark) == base + 1
+    release(lazy)
+    assert _persistent(spark) == base
+    assert _stored(spark) == stored
 
 
 def test_fence_materializes_before_sizing(spark):
@@ -75,3 +101,53 @@ def test_spread_scan_enough_row_groups_is_identity(spark, tmp_path):
     assert spread_scan(df) is df
     rng = spark.range(5)
     assert spread_scan(rng) is rng
+
+
+def _materializer_calls(tree: ast.Module) -> list[str]:
+    return [
+        f"{node.func.attr}@{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in MATERIALIZERS
+    ]
+
+
+def test_no_raw_materialization_outside_io():
+    """Intermediates are materialized with io.fence and freed with
+    io.release: no module but io.py calls localCheckpoint, checkpoint,
+    persist, cache or unpersist."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel != "io.py":
+            calls = _materializer_calls(ast.parse(path.read_text(), str(path)))
+            offenders += [f"{rel}: {c}" for c in calls]
+    assert offenders == []
+
+
+def test_kmv_reads_rewritten_source(spark, tmp_path):
+    """A source rewritten in place is re-read: the kmv query's shared
+    distinct-pairs table is a per-build fence, not a cached plan that
+    Spark's CacheManager would match to the new scan of the same path
+    and serve with the old file's counts."""
+    sys.path.insert(0, str(PACKAGE.parent / "tools"))
+    import __spark_entry__ as entry
+    import check
+
+    for name in check.TABLES:
+        src = f"{SF_MED}/{name}.parquet"
+        if name == "documents":
+            shutil.copyfile(src, tmp_path / "documents.parquet")
+        elif os.path.exists(src):
+            os.symlink(src, tmp_path / f"{name}.parquet")
+    sf_dir = str(tmp_path)
+    fn = entry.queries()["kmv_distinct_shingles"]
+    sql = entry.oracle_sql()["kmv_distinct_shingles"]
+
+    ok, msg, _ = check.compare_query(spark, check.duck_connection(sf_dir), fn, sql, sf_dir)
+    assert ok, msg
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    pq.write_table(docs.slice(0, docs.num_rows // 2), tmp_path / "documents.parquet")
+    ok, msg, _ = check.compare_query(spark, check.duck_connection(sf_dir), fn, sql, sf_dir)
+    assert ok, msg
