@@ -53,7 +53,11 @@ def bin_label(col: Column, edges: list[float], labels: list[str]) -> Column:
     y_atc at (−∞,−100,100,∞) → pt1/pt2/pt3). NULL and NaN inputs map
     to NULL, matching pd.cut's NaN — without the explicit guard they
     would fall through every `<= edge` WHEN into the TOP bin."""
-    assert len(labels) == len(edges) + 1
+    if len(labels) != len(edges) + 1:
+        raise ValueError(
+            f"bin_label: {len(edges)} edges make {len(edges) + 1} bins, "
+            f"got {len(labels)} labels"
+        )
     expr = F.when(col.isNull() | F.isnan(col), F.lit(None).cast("string"))
     expr = expr.when(col <= F.lit(edges[0]), F.lit(labels[0]))
     for i in range(1, len(edges)):

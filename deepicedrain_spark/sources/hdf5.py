@@ -10,21 +10,17 @@ importable, else the vendored pure-numpy ``hdf5lite`` reader (spec
 subset: superblock v0-v3, v1/v2 object headers, symbol-table groups,
 contiguous + chunked/gzip/shuffle layouts with partial reads) — so the
 scan runs LIVE in this environment, matching the reference's actual
-ATL06/ATL11 ingest entry point. The plan:
+ATL06/ATL11 ingest entry point. The plan (``stripes.scan``, shared with
+the Zarr readers):
 
-- driver: open the file once, list datasets, validate equal lengths,
-  derive the chunk grid (HDF5's own chunk shape when present, else
-  ``chunk_rows``);
-- executors: one ``mapInPandas`` task per chunk stripe re-opens the
-  file read-only (HDF5 SWMR-safe for concurrent readers) and slices
-  every requested dataset for its [start, start+length) range into one
-  Arrow batch, plus a ``row_index`` column (the granule's implicit
-  key).
-
-At 100 TB (thousands of granules) the file list becomes the task axis
-one level up: union per-file reads, or pass many paths and explode
-(path × chunk) — each task still touches one contiguous stripe of one
-file.
+- driver: one header read per (file, group) — list datasets, validate
+  equal lengths, derive the stripe (``chunk_rows``, else a multiple of
+  HDF5's own chunk shape of at least 64k rows);
+- executors: ONE task table over (file × chunk stripe) for any number
+  of files; each task opens a file read-only once (HDF5 SWMR-safe for
+  concurrent readers) and slices every requested dataset for each of
+  its [start, start+length) stripes into one Arrow batch, plus a
+  ``row_index`` column (the granule's implicit key).
 """
 
 from __future__ import annotations
@@ -32,51 +28,10 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from deepicedrain_spark.sources.naming import safe_key_component
-
-_NP_TO_SPARK = {
-    "int64": "long",
-    "int32": "int",
-    "int16": "short",
-    "int8": "byte",
-    "uint8": "int",
-    "uint16": "int",
-    "uint32": "long",
-    "float64": "double",
-    "float32": "float",
-    "bool": "boolean",
-}
-
-
-def plan_chunks(n_rows: int, chunk_rows: int) -> list[tuple[int, int]]:
-    """[(start, length), ...] covering [0, n_rows) in uniform stripes
-    (last one ragged) — the task grid for a chunk-parallel scan."""
-    if n_rows < 0 or chunk_rows <= 0:
-        raise ValueError(f"plan_chunks: bad n_rows={n_rows} chunk_rows={chunk_rows}")
-    return [
-        (start, min(chunk_rows, n_rows - start))
-        for start in range(0, n_rows, chunk_rows)
-    ]
-
-
-def spark_schema_for(np_dtypes: dict[str, str | tuple[str, int]]) -> str:
-    """DDL schema string (row_index first) for dataset dtype names.
-    A value may be ``(dtype, ndim)``: rank-2 datasets land as
-    ``array<T>`` columns (one vector per row along axis 1 — the ATL11
-    ``h_corr[ref_pt, cycle]`` shape)."""
-    cols = []
-    for name, dt in np_dtypes.items():
-        ndim = 1
-        if isinstance(dt, tuple):
-            dt, ndim = dt
-        if dt not in _NP_TO_SPARK:
-            raise TypeError(f"read_hdf5: unsupported dataset dtype {name}:{dt}")
-        base = _NP_TO_SPARK[dt]
-        cols.append(f"`{name}` {base}" if ndim == 1 else f"`{name}` array<{base}>")
-    return "row_index long, " + ", ".join(cols)
+from deepicedrain_spark.sources.stripes import Part, scan
 
 
 def _open_h5(path: str):
@@ -93,27 +48,58 @@ def _open_h5(path: str):
         return hdf5lite.File(path)
 
 
-_MANY_TASK_CAP = 512  # same partition cap as the multi-store Zarr scan
+def _probe(
+    path: str, group: str, datasets: list[str], chunk_rows: int | None, missing_ok: bool
+) -> tuple[int, int, dict[str, tuple]] | None:
+    """One granule header read: (rows, stride, {dataset: (dtype, rank)})
+    for the requested datasets of ``group``. ``missing_ok`` skips absent
+    datasets and returns None when the group itself is absent."""
+    with _open_h5(path) as f:
+        if missing_ok and group not in f:
+            return None
+        grp = f[group]
+        lengths, cols, native_chunks = {}, {}, set()
+        for name in datasets:
+            if missing_ok and name not in grp:
+                continue
+            d = grp[name]
+            if len(d.shape) not in (1, 2):
+                raise ValueError(f"read_hdf5: {path}:{group}/{name} is not 1-D or 2-D")
+            lengths[name] = d.shape[0]
+            # rank-2 datasets become array<T> columns: one vector per
+            # row along axis 1 (ATL11 h_corr[ref_pt, cycle]);
+            # newbyteorder('=') maps big-endian file dtypes to the
+            # native name (reads are normalized in _h5_stripe)
+            cols[name] = (str(np.dtype(d.dtype).newbyteorder("=")), len(d.shape))
+            if d.chunks:
+                native_chunks.add(d.chunks[0])
+    if len(set(lengths.values())) > 1:
+        raise ValueError(f"read_hdf5: ragged datasets in {path}:{group}: {lengths}")
+    if chunk_rows:
+        stride = chunk_rows
+    elif native_chunks:
+        # stripe = a multiple of the native chunk (decompression stays
+        # aligned) of at least 64k rows — a file gzip-chunked at e.g.
+        # 100 rows must not explode a 10M-row dataset into 100k tasks
+        native = max(native_chunks)
+        stride = native * max(1, -(-65536 // native))
+    else:
+        stride = 65536
+    return max(lengths.values(), default=0), stride, cols
 
 
-def _tag_spark_type(key: str, value) -> str:
-    """Spark DDL type for a per-file tag value. isinstance-based so
-    numpy scalars / bool / float from upstream parsers map cleanly
-    instead of raising a bare KeyError (ADVICE r7 low); bool is checked
-    before int because bool IS an int in Python."""
-    if isinstance(value, (bool, np.bool_)):
-        return "boolean"
-    if isinstance(value, (int, np.integer)):
-        return "int"  # tags are small metadata (cycle/track numbers)
-    if isinstance(value, (float, np.floating)):
-        return "double"
-    if isinstance(value, str):
-        return "string"
-    raise ValueError(
-        f"read_hdf5_many: tag {key!r} has unsupported type "
-        f"{type(value).__name__} (expected bool/int/float/str or numpy "
-        "scalar)"
-    )
+def _h5_stripe(grp, cols: list[str], start: int, length: int) -> list[np.ndarray]:
+    out = []
+    for name in cols:
+        arr = grp[name][start : start + length]
+        if arr.dtype.byteorder == ">":  # h5py keeps file order
+            arr = arr.astype(arr.dtype.newbyteorder("="))
+        out.append(arr)
+    return out
+
+
+def _read_group_stripe(f, key, cols, start, length):
+    return _h5_stripe(f[key[1]], cols, start, length)  # key = (path, group)
 
 
 def read_hdf5_many(
@@ -123,12 +109,12 @@ def read_hdf5_many(
     chunk_rows: int | None = None,
 ) -> DataFrame:
     """Distributed scan of MANY (path, group) dataset sets through ONE
-    (part × chunk-stripe) task table and ONE mapInPandas — the same
-    single-task-table shape as the multi-store Zarr scan (round 7: the
-    per-(granule, beam) union built 18 separate tiny scans, each with
-    its own repartition exchange — a ~40-stage storm whose scheduling
-    latency dominated atl06_ingest_pipeline; at 1000 granules it would
-    be a 6000-leg union).
+    (part × chunk-stripe) task table and ONE mapInPandas (the
+    ``stripes.scan``; round 7: the per-(granule, beam) union built 18
+    separate tiny scans, each with its own repartition exchange — a
+    ~40-stage storm whose scheduling latency dominated
+    atl06_ingest_pipeline; at 1000 granules it would be a 6000-leg
+    union).
 
     ``parts``: (path, group, tags) triples — ``tags`` maps identity
     column name -> int|str literal (rgt/cycle/beam) attached to every
@@ -137,103 +123,16 @@ def read_hdf5_many(
     the 1387-store Zarr probe measured 0.19 s total)."""
     if not parts:
         raise ValueError("read_hdf5_many: no parts given")
-    tag_keys = list(parts[0][2].keys())
-    ref_dtypes: dict[str, str] | None = None
-    rows: list[tuple] = []
+    probed = []
     for path, group, tags in parts:
         path = os.path.abspath(path)
-        if list(tags.keys()) != tag_keys:
-            raise ValueError("read_hdf5_many: parts disagree on tag keys")
-        with _open_h5(path) as f:
-            grp = f[group]
-            shapes = {}
-            dtypes = {}
-            native_chunks = set()
-            for name in datasets:
-                d = grp[name]
-                if len(d.shape) not in (1, 2):
-                    raise ValueError(f"read_hdf5: {group}/{name} is not 1-D or 2-D")
-                shapes[name] = d.shape[0]
-                # rank-2 datasets become array<T> columns: one vector
-                # per row along axis 1 (ATL11 h_corr[ref_pt, cycle]);
-                # newbyteorder('=') maps big-endian file dtypes to the
-                # native name (reads are normalized in decode)
-                dtypes[name] = (str(np.dtype(d.dtype).newbyteorder("=")), len(d.shape))
-                if d.chunks:
-                    native_chunks.add(d.chunks[0])
-        lengths = set(shapes.values())
-        if len(lengths) != 1:
-            raise ValueError(f"read_hdf5: ragged datasets under {group}: {shapes}")
-        if ref_dtypes is None:
-            ref_dtypes = dtypes
-        elif dtypes != ref_dtypes:
-            raise ValueError(
-                f"read_hdf5_many: {path}:{group} dtypes {dtypes} != {ref_dtypes}"
-            )
-        n_rows = lengths.pop()
-        if n_rows == 0:
-            continue  # legal HDF5 (empty beam); contributes no tasks
-        if chunk_rows:
-            stride = chunk_rows
-        elif native_chunks:
-            # stripe = a multiple of the native chunk (decompression
-            # stays aligned) of at least 64k rows — a file gzip-chunked
-            # at e.g. 100 rows must not explode a 10M-row dataset into
-            # 100k tasks
-            native = max(native_chunks)
-            stride = native * max(1, -(-65536 // native))
-        else:
-            stride = 65536
-        for start, length in plan_chunks(n_rows, stride):
-            # numpy scalars -> Python natives so createDataFrame accepts
-            # them against the DDL schema
-            tag_vals = [
-                t.item() if isinstance(t, np.generic) else t
-                for t in (tags[k] for k in tag_keys)
-            ]
-            rows.append((path, group, start, length, *tag_vals))
-
-    tag_ddl = "".join(
-        f", `{k}` {_tag_spark_type(k, parts[0][2][k])}" for k in tag_keys
+        probed.append(Part(
+            {"path": path, "grp": group}, *_probe(path, group, datasets, chunk_rows, False), tags
+        ))
+    return scan(
+        spark, probed, datasets, _open_h5, _read_group_stripe,
+        who="read_hdf5_many", nouns=("granule", "dataset"),
     )
-    out_schema = spark_schema_for(ref_dtypes) + tag_ddl
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    task_schema = "path string, grp string, start long, length long" + tag_ddl
-    chunks_df = spark.createDataFrame(rows, task_schema).repartition(
-        min(len(rows), _MANY_TASK_CAP)
-    )
-
-    def decode(batches):
-        handles: dict[str, object] = {}
-        try:
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    f = handles.get(row.path)
-                    if f is None:
-                        f = handles[row.path] = _open_h5(row.path)
-                    grp = f[row.grp]
-                    start, length = int(row.start), int(row.length)
-                    out = {
-                        "row_index": np.arange(start, start + length, dtype=np.int64)
-                    }
-                    for name in datasets:
-                        arr = grp[name][start : start + length]
-                        if arr.dtype.byteorder == ">":  # h5py keeps file order
-                            arr = arr.astype(arr.dtype.newbyteorder("="))
-                        # rank-2 stripes become one vector per row
-                        out[name] = list(arr) if arr.ndim == 2 else arr
-                    for k in tag_keys:
-                        out[k] = [getattr(row, k)] * length
-                    yield pd.DataFrame(out)
-        finally:
-            for f in handles.values():
-                try:
-                    f.close()
-                except Exception:
-                    pass
-
-    return chunks_df.mapInPandas(decode, schema=out_schema)
 
 
 def read_hdf5(
@@ -294,7 +193,7 @@ def write_hdf5_partitioned(
     stores; pick ``key_col`` accordingly (rgt, date bucket, hash mod N).
     Writers target a shared filesystem on a real cluster (local FS here).
     """
-    import pandas as pd  # noqa: F811 (executor-side import)
+    import pandas as pd
 
     from deepicedrain_spark.sources.hdf5lite import write_hdf5
 
@@ -335,28 +234,25 @@ def read_hdf5_dir(
     granule_col: str | None = None,
     missing_ok: bool = False,
 ) -> DataFrame:
-    """Multi-granule scan: ONE task table over (path × chunk stripe)
-    for every ``*.h5`` under ``out_dir`` — the file axis the
-    single-file scan's docstring promises. Deliberately NOT a union of
-    per-file reads: at the reference's 1387-granule store a union is a
-    1387-leg plan, while this stays a single mapInPandas whatever the
-    file count. Driver cost is one header read per file (schema
-    validation + row counts); each task then touches one contiguous
-    stripe of one file. ``granule_col`` adds the source filename (the
-    reference's add_path_to_ds, atlxi_dhdt.py:60-70).
+    """Multi-granule scan: every ``*.h5`` under ``out_dir`` through the
+    one (path × chunk stripe) task table of ``stripes.scan`` — the file
+    axis the single-file scan's docstring promises. Deliberately NOT a
+    union of per-file reads: at the reference's 1387-granule store a
+    union is a 1387-leg plan, while this stays a single mapInPandas
+    whatever the file count. Driver cost is one header read per file
+    (schema validation + row counts); each task then touches one
+    contiguous stripe of one file. ``granule_col`` adds the source
+    filename (the reference's add_path_to_ds, atlxi_dhdt.py:60-70).
 
     ``missing_ok=True`` is the schema-evolution mode real ICESat-2
-    archives need (the Zarr-side analogue is read_zarr_dir's
-    schema_mode='union'): a granule missing a requested DATASET
-    null-fills that column for its rows (metadata-driven — no I/O for
-    the absent dataset), and a granule missing the whole beam GROUP
-    contributes zero rows, exactly as the reference's per-beam loops
-    skip absent beams (atl06_play.py:318-327). Where a dataset IS
-    present its dtype/rank must still agree across granules; a granule
-    having the group but NONE of the requested datasets is an error
-    (its row count would be undefined)."""
-    import pandas as pd  # noqa: F811
-
+    archives need (read_zarr_dir takes the same switch): a granule
+    missing a requested DATASET null-fills that column for its rows
+    (metadata-driven — no I/O for the absent dataset), and a granule
+    missing the whole beam GROUP contributes zero rows, exactly as the
+    reference's per-beam loops skip absent beams (atl06_play.py:318-327).
+    Where a dataset IS present its dtype/rank must still agree across
+    granules; a granule having the group but NONE of the requested
+    datasets is an error (its row count would be undefined)."""
     files = sorted(
         os.path.join(out_dir, f)
         for f in os.listdir(out_dir)
@@ -364,119 +260,20 @@ def read_hdf5_dir(
     )
     if not files:
         raise ValueError(f"read_hdf5_dir: no .h5 granules under {out_dir}")
-
-    tasks = []
-    dtypes_ref: dict[str, str] | None = None
-    union_dtypes: dict[str, tuple] = {}
-    present: dict[str, set[str]] = {}
+    parts = []
     for path in files:
-        with _open_h5(path) as f:
-            if missing_ok and group not in f:
-                continue  # granule lacks the beam entirely: zero rows
-            grp = f[group]
-            shapes = set()
-            dtypes = {}
-            native_chunks = set()
-            for name in datasets:
-                if missing_ok and name not in grp:
-                    continue
-                d = grp[name]
-                if len(d.shape) not in (1, 2):
-                    raise ValueError(
-                        f"read_hdf5_dir: {path}:{group}/{name} is not 1-D or 2-D"
-                    )
-                shapes.add(d.shape[0])
-                dtypes[name] = (str(np.dtype(d.dtype).newbyteorder("=")), len(d.shape))
-                if d.chunks:
-                    native_chunks.add(d.chunks[0])
-        if missing_ok and not dtypes:
-            raise ValueError(
-                f"read_hdf5_dir: {path}:{group} has none of the requested "
-                f"datasets {datasets}"
-            )
-        if len(shapes) != 1:
-            raise ValueError(f"read_hdf5_dir: ragged datasets in {path}")
-        if missing_ok:
-            present[path] = set(dtypes)
-            for name, sig in dtypes.items():
-                if name not in union_dtypes:
-                    union_dtypes[name] = sig
-                elif union_dtypes[name] != sig:
-                    raise ValueError(
-                        f"read_hdf5_dir: schema drift for dataset {name!r} at "
-                        f"{path}: {sig} != {union_dtypes[name]} — missing_ok "
-                        "null-fills ABSENT datasets but requires agreeing "
-                        "dtype/rank where present"
-                    )
-        elif dtypes_ref is None:
-            dtypes_ref = dtypes
-        elif dtypes != dtypes_ref:
-            raise ValueError(
-                f"read_hdf5_dir: schema drift at {path}: {dtypes} != {dtypes_ref}"
-            )
-        n_rows = shapes.pop()
-        if chunk_rows:
-            stride = chunk_rows
-        elif native_chunks:
-            native = max(native_chunks)
-            stride = native * max(1, -(-65536 // native))
-        else:
-            stride = 65536
-        tasks.extend(
-            (path, start, length) for start, length in plan_chunks(n_rows, stride)
-        )
+        probed = _probe(path, group, datasets, chunk_rows, missing_ok)
+        if probed is None:
+            continue  # granule lacks the beam entirely: zero rows
+        tags = {granule_col: os.path.basename(path)} if granule_col else {}
+        parts.append(Part({"path": path}, *probed, tags))
+    if not parts:
+        raise ValueError(f"read_hdf5_dir: no granule under {out_dir} has group {group!r}")
 
-    if missing_ok:
-        if not union_dtypes:
-            raise ValueError(
-                f"read_hdf5_dir: no granule under {out_dir} has group {group!r}"
-            )
-        # a requested dataset present in NO granule has no inferable
-        # dtype — silence here would hide a caller typo behind a
-        # silently-narrower frame that only fails (or skews) downstream
-        nowhere = [n for n in datasets if n not in union_dtypes]
-        if nowhere:
-            raise ValueError(
-                f"read_hdf5_dir: requested dataset(s) {nowhere} appear in no "
-                f"granule under {out_dir}:{group} — missing_ok null-fills "
-                "datasets absent from SOME granules, but a dataset absent "
-                "everywhere has no dtype to infer (check the name)"
-            )
-        # deterministic column order: the caller's datasets order
-        dtypes_ref = {n: union_dtypes[n] for n in datasets if n in union_dtypes}
-    schema = spark_schema_for(dtypes_ref)
-    if granule_col:
-        schema += f", `{granule_col}` string"
-    if not tasks:
-        return spark.createDataFrame([], schema)
-    tasks_df = spark.createDataFrame(
-        tasks, "path string, start long, length long"
-    ).repartition(len(tasks))
+    def read_stripe(f, key, cols, start, length):
+        return _h5_stripe(f[group], cols, start, length)
 
-    out_names = list(dtypes_ref)
-
-    def decode(batches):
-        for pdf in batches:
-            for path, start, length in zip(pdf["path"], pdf["start"], pdf["length"]):
-                start, length = int(start), int(length)
-                have = present.get(str(path)) if missing_ok else None
-                with _open_h5(path) as f:
-                    grp = f[group]
-                    out = {
-                        "row_index": np.arange(start, start + length, dtype=np.int64)
-                    }
-                    for name in out_names:
-                        if have is not None and name not in have:
-                            # missing_ok: dataset absent from this
-                            # granule — metadata-driven NULL fill
-                            out[name] = pd.Series([None] * length, dtype="object")
-                            continue
-                        arr = grp[name][start : start + length]
-                        if arr.dtype.byteorder == ">":  # h5py keeps file order
-                            arr = arr.astype(arr.dtype.newbyteorder("="))
-                        out[name] = list(arr) if arr.ndim == 2 else arr
-                if granule_col:
-                    out[granule_col] = np.full(length, os.path.basename(path))
-                yield pd.DataFrame(out)
-
-    return tasks_df.mapInPandas(decode, schema=schema)
+    return scan(
+        spark, parts, datasets, _open_h5, read_stripe, missing_ok=missing_ok,
+        who="read_hdf5_dir", nouns=("granule", "dataset"),
+    )

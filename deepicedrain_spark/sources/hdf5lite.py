@@ -26,8 +26,8 @@ Reader (``File``):
 - partial reads: axis-0 slices (any rank since round 9 — the ATL11
   ``h_corr[ref_pt, cycle]`` shape, assembled across multi-axis chunk
   grids) touch only the bytes/chunks they need — this is what makes
-  the executor-side stripe scan in ``sources/hdf5.py`` O(stripe),
-  not O(file).
+  the executor-side stripe scan (``sources/stripes.py``, fed by
+  ``sources/hdf5.py``) O(stripe), not O(file).
 
 Writer (``write_hdf5``):
 - superblock v0, v1 object headers, symbol-table groups (B-tree v1 +

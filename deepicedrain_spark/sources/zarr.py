@@ -20,10 +20,11 @@ Both directions are distributed and chunk-parallel:
   no single-task bottleneck) → one shuffle keyed on chunk id →
   each task writes its chunk files. Chunks are uniform by construction
   (last one ragged), as the v2 spec requires.
-- **read**: chunk index enumerated from .zarray driver-side; a
-  mapInPandas over the (col-independent) chunk ids decodes all column
-  chunks for that stripe into Arrow batches. At 100 TB each chunk is
-  an independent task — same parallelism story as parquet row groups.
+- **read**: chunk grid enumerated from the array metadata driver-side;
+  the (store × chunk-stripe) task table of ``stripes.scan`` (shared
+  with the HDF5 readers) decodes all column chunks of a stripe into
+  one Arrow batch. At 100 TB each stripe is an independent unit of
+  work — same parallelism story as parquet row groups.
 
 Supported dtypes: ints/floats/bool (the reference's data model §1.3).
 Writes are always little-endian; reads also accept big-endian stores
@@ -39,6 +40,7 @@ import json
 import os
 import re
 import zlib
+from contextlib import nullcontext
 
 import numpy as np
 import pandas as pd
@@ -46,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from deepicedrain_spark.io import fence, release
 from deepicedrain_spark.sources.naming import safe_key_component
+from deepicedrain_spark.sources.stripes import Part, scan
 
 _SPARK_TO_NP = {
     "bigint": "<i8",
@@ -692,48 +695,61 @@ def _store_arrays(
     return arrays
 
 
+def _stripe(arrays: dict[str, dict], key, cols, start: int, length: int):
+    """``stripes.scan`` reader: one stripe of ``cols`` from the store at
+    ``key[0]`` (every array of a store shares the axis-0 chunk size)."""
+    return [
+        _read_stripe(key[0], c, arrays[c], start // arrays[c]["chunks"][0], length)
+        for c in cols
+    ]
+
+
+def _scan_stores(
+    spark: SparkSession,
+    stores: list[tuple[str, dict]],
+    columns: list[str] | None,
+    missing_ok: bool,
+    who: str,
+) -> DataFrame:
+    """(store path, tags) pairs -> the one ``stripes.scan``: one
+    metadata read per store, its chunk grid as the stripe, and the
+    (dtype, rank, trailing shape) signature per array — rank is schema
+    (a 2-D column is array<T>) and the axis-1 extent is pinned too, since
+    ragged vectors across stores would silently misalign downstream
+    zips. Output columns come sorted by name."""
+    parts, meta = [], {}
+    for path, tags in stores:
+        arrays = meta[path] = _store_arrays(path, columns, optional=missing_ok)
+        for c, a in arrays.items():
+            if a.get("filters"):
+                # decoding would inflate then frombuffer the STILL-
+                # FILTERED bytes into garbage values with no error
+                raise ValueError(
+                    f"{who}: array {path}/{c} uses codec filters "
+                    f"{a['filters']}; only plain zlib/gzip/no-compressor "
+                    "stores are supported"
+                )
+        first = next(iter(arrays.values()), None)  # None: none requested
+        sigs = {
+            c: (str(np.dtype(a["dtype"])), len(a["shape"]), tuple(a["shape"][1:]))
+            for c, a in arrays.items()
+        }
+        rows, stride = (first["shape"][0], first["chunks"][0]) if first else (0, 1)
+        parts.append(Part({"path": path}, rows, stride, sigs, tags))
+    return scan(
+        spark, parts, sorted(columns) if columns else None,
+        lambda path: nullcontext(meta[path]), _stripe,
+        missing_ok=missing_ok, tags_first=True, who=who, nouns=("store", "variable"),
+    )
+
+
 def read_zarr(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
     """Distributed Zarr scan (v2 OR v3 — auto-detected): one task per
     chunk stripe, all columns of a stripe decoded together; adds
     ``row_index`` (the global array position — Zarr's implicit key,
-    which parquet has no analogue for)."""
-    arrays = _store_arrays(path, columns)
-    cols = sorted(arrays)
-    first = arrays[cols[0]]
-    n_rows, chunk_rows = first["shape"][0], first["chunks"][0]
-    n_chunks = (n_rows + chunk_rows - 1) // chunk_rows
-    _REV = {"<i8": "long", "<i4": "int", "<i2": "short", "<i1": "byte",
-            "<f8": "double", "<f4": "float", "|b1": "boolean"}
-
-    def ddl(c: str) -> str:
-        base = _REV[arrays[c]["dtype"]]
-        return base if len(arrays[c]["shape"]) == 1 else f"array<{base}>"
-
-    schema = "row_index long, " + ", ".join(f"`{c}` {ddl(c)}" for c in cols)
-    chunks_df = spark.range(n_chunks).withColumnRenamed("id", "cid")
-    for c in cols:
-        if arrays[c].get("filters"):
-            # decoding would zlib-inflate then frombuffer the STILL-
-            # FILTERED bytes into garbage values with no error
-            raise ValueError(
-                f"read_zarr: array {c!r} uses codec filters "
-                f"{arrays[c]['filters']}; only plain zlib/no-compressor "
-                "stores are supported"
-            )
-
-    def decode(batches):
-        for pdf in batches:
-            for cid in pdf["cid"]:
-                cid = int(cid)
-                start = cid * chunk_rows
-                length = min(chunk_rows, n_rows - start)
-                out = {"row_index": np.arange(start, start + length, dtype=np.int64)}
-                for c in cols:
-                    arr = _read_stripe(path, c, arrays[c], cid, length)
-                    out[c] = list(arr) if arr.ndim == 2 else arr
-                yield pd.DataFrame(out)
-
-    return chunks_df.mapInPandas(decode, schema=schema)
+    which parquet has no analogue for). The one-store case of
+    read_zarr_dir's scan."""
+    return _scan_stores(spark, [(path, {})], columns, False, "read_zarr")
 
 
 def read_zarr_dir(
@@ -741,7 +757,7 @@ def read_zarr_dir(
     parent: str,
     columns: list[str] | None = None,
     store_col: str = "store",
-    schema_mode: str = "strict",
+    missing_ok: bool = False,
 ) -> DataFrame:
     """Multi-store Zarr scan — the reference's ACTUAL ingest shape:
     ``xr.open_mfdataset("ATL11_*.zarr", combine="nested",
@@ -749,36 +765,28 @@ def read_zarr_dir(
     path attached per row (add_path_to_ds,
     /root/reference/atlxi_dhdt.py:60-82). Every direct child of
     ``parent`` that is a Zarr store (v2 consolidated or v3) becomes
-    part of ONE (store × chunk-stripe) task table — a single
-    mapInPandas whatever the store count, like read_hdf5_dir, never a
-    per-store union plan. Row counts, chunk sizes, versions and
-    compressors may differ per store.
+    part of ONE (store × chunk-stripe) task table — the same
+    ``stripes.scan`` as read_hdf5_dir, a single mapInPandas whatever
+    the store count, never a per-store union plan. Row counts, chunk
+    sizes, versions and compressors may differ per store.
 
-    ``schema_mode``:
-
-    - ``"strict"`` (default): stores must agree exactly on column
-      names, dtypes, ranks and trailing shapes — any drift raises.
-    - ``"union"``: the output schema is the UNION of the stores'
-      variable sets; a variable absent from a store reads as NULL for
-      that store's rows — matching ``xr.open_mfdataset`` nested-concat
-      semantics, where a granule missing a variable (e.g. a track
-      without some cycles) contributes missing values that downstream
-      ``dropna(thresh=…)`` then prunes (atlxi_dhdt.py:73-82, 111).
-      Where a variable IS present its dtype/rank/trailing shape must
-      still agree across stores (union mode fills MISSING variables;
-      it never coerces conflicting types). The null-fill is metadata
-      driven — no chunk is read for an absent variable, so the scan
-      cost is unchanged and the per-task work stays proportional to
-      the bytes that exist.
+    By default stores must agree exactly on column names, dtypes, ranks
+    and trailing shapes — any drift raises. ``missing_ok=True`` (the
+    switch read_hdf5_dir takes too): the output schema is the UNION of
+    the stores' variable sets; a variable absent from a store reads as
+    NULL for that store's rows — matching ``xr.open_mfdataset``
+    nested-concat semantics, where a granule missing a variable (e.g. a
+    track without some cycles) contributes missing values that
+    downstream ``dropna(thresh=…)`` then prunes (atlxi_dhdt.py:73-82,
+    111). Where a variable IS present its dtype/rank/trailing shape
+    must still agree across stores (absent variables are filled;
+    conflicting types are never coerced). The null-fill is metadata
+    driven — no chunk is read for an absent variable, so the per-task
+    work stays proportional to the bytes that exist.
 
     Output: ``store`` (dir name), ``row_index`` (position WITHIN the
     store — the reference's per-granule ref_pt), plus the data
     columns."""
-    if schema_mode not in ("strict", "union"):
-        raise ValueError(
-            f"read_zarr_dir: schema_mode={schema_mode!r}; "
-            "expected 'strict' or 'union'"
-        )
     stores = sorted(
         d
         for d in os.listdir(parent)
@@ -805,124 +813,10 @@ def read_zarr_dir(
     if not stores:
         raise ValueError(f"read_zarr_dir: no zarr stores under {parent}")
 
-    _REV = {"<i8": "long", "<i4": "int", "<i2": "short", "<i1": "byte",
-            "<f8": "double", "<f4": "float", "|b1": "boolean"}
-    meta: dict[str, dict] = {}
-    sig_ref: list[tuple[str, str]] | None = None
-    union_sig: dict[str, tuple] = {}  # col -> (dtype, rank, tail shape)
-    tasks: list[tuple[str, int]] = []
-    for s in stores:
-        path = os.path.join(parent, s)
-        if schema_mode == "union":
-            arrays = _store_arrays(path, columns, optional=True)
-            if not arrays:
-                raise ValueError(
-                    f"read_zarr_dir: store {s} has none of the requested "
-                    f"columns {columns}"
-                )
-        else:
-            arrays = _store_arrays(path, columns)
-        store_cols = sorted(arrays)
-        # rank is part of the schema signature: a 2-D column is
-        # array<T>, so stores must agree on it (axis-1 extent may vary
-        # per store only when every store's is equal — the vector
-        # length is data, not schema, but ragged vectors across stores
-        # would silently misalign downstream zips, so pin it too)
-        sig = [
-            (c, arrays[c]["dtype"], len(arrays[c]["shape"]), tuple(arrays[c]["shape"][1:]))
-            for c in store_cols
-        ]
-        if schema_mode == "union":
-            # per-VARIABLE agreement where present; absence is fine
-            for c, dt, rank, tail in sig:
-                if c not in union_sig:
-                    union_sig[c] = (dt, rank, tail)
-                elif union_sig[c] != (dt, rank, tail):
-                    raise ValueError(
-                        f"read_zarr_dir: schema drift for variable {c!r} "
-                        f"at {s}: {(dt, rank, tail)} != {union_sig[c]} — "
-                        "union mode null-fills MISSING variables but "
-                        "requires agreeing dtype/rank where present"
-                    )
-        elif sig_ref is None:
-            sig_ref = sig
-        elif sig != sig_ref:
-            raise ValueError(
-                f"read_zarr_dir: schema drift at {s}: {sig} != {sig_ref}"
-            )
-        for c in store_cols:
-            if arrays[c].get("filters"):
-                raise ValueError(
-                    f"read_zarr_dir: array {s}/{c} uses codec filters; "
-                    "only plain zlib/no-compressor stores are supported"
-                )
-        first = arrays[store_cols[0]]
-        n_rows, chunk_rows = first["shape"][0], first["chunks"][0]
-        meta[s] = {
-            "n_rows": n_rows,
-            "chunk_rows": chunk_rows,
-            "arrays": arrays,
-        }
-        n_chunks = (n_rows + chunk_rows - 1) // chunk_rows
-        tasks.extend((s, cid) for cid in range(n_chunks))
-
-    if schema_mode == "union":
-        # a requested column present in NO store would silently vanish
-        # from the union schema (the per-store check above only fires
-        # when a store has ZERO requested columns) — a typo'd name must
-        # raise here, not surface as a narrower frame downstream
-        if columns is not None:
-            nowhere = [c for c in columns if c not in union_sig]
-            if nowhere:
-                raise ValueError(
-                    f"read_zarr_dir: requested column(s) {nowhere} appear "
-                    f"in no store under {parent} — union mode null-fills "
-                    "columns absent from SOME stores, but a column absent "
-                    "everywhere has no dtype to infer (check the name)"
-                )
-        cols = sorted(union_sig)
-        col_sig = union_sig
-    else:
-        cols = [c for c, _, _, _ in sig_ref]
-        col_sig = {c: (dt, rank, tail) for c, dt, rank, tail in sig_ref}
-
-    def ddl(c: str) -> str:
-        dt, rank, _ = col_sig[c]
-        base = _REV[dt]
-        return base if rank == 1 else f"array<{base}>"
-
-    schema = f"`{store_col}` string, row_index long, " + ", ".join(
-        f"`{c}` {ddl(c)}" for c in cols
+    return _scan_stores(
+        spark, [(os.path.join(parent, d), {store_col: d}) for d in stores],
+        columns, missing_ok, "read_zarr_dir",
     )
-    if not tasks:
-        return spark.createDataFrame([], schema)
-    tasks_df = spark.createDataFrame(tasks, "s string, cid long").repartition(
-        min(len(tasks), 512)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            for s, cid in zip(pdf["s"], pdf["cid"]):
-                s, cid = str(s), int(cid)
-                m = meta[s]
-                start = cid * m["chunk_rows"]
-                length = min(m["chunk_rows"], m["n_rows"] - start)
-                out = {
-                    store_col: np.full(length, s),
-                    "row_index": np.arange(start, start + length, dtype=np.int64),
-                }
-                for c in cols:
-                    a = m["arrays"].get(c)
-                    if a is None:
-                        # union mode: variable absent from this store —
-                        # metadata-driven NULL fill, no chunk I/O
-                        out[c] = pd.Series([None] * length, dtype="object")
-                        continue
-                    arr = _read_stripe(os.path.join(parent, s), c, a, cid, length)
-                    out[c] = list(arr) if arr.ndim == 2 else arr
-                yield pd.DataFrame(out)
-
-    return tasks_df.mapInPandas(decode, schema=schema)
 
 
 def write_zarr_local(

@@ -2304,7 +2304,8 @@ def q_hdf5_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle=True,
         )
         n_granules = manifest.count()  # forces the distributed write
-        assert n_granules == 8, f"expected 8 granules, wrote {n_granules}"
+        if n_granules != 8:
+            raise RuntimeError(f"hdf5_roundtrip: expected 8 granules, wrote {n_granules}")
 
     synth_once(out_dir, _make, token=source_token(sf_dir, "events", "h5rt-v1"))
     back = read_hdf5_dir(
@@ -3473,7 +3474,7 @@ def q_zarr_unconsolidated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # downstream dropna(thresh=2) prunes them (atlxi_dhdt.py:73-82, 111).
 # Three shard stores are written with HETEROGENEOUS variable sets
 # (shard_0 all three, shard_1 without t_us, shard_2 without value);
-# read_zarr_dir(schema_mode='union') presents the union schema with
+# read_zarr_dir(missing_ok=True) presents the union schema with
 # metadata-driven NULL fill (no chunk I/O for absent variables), and
 # per-store null-aware aggregates must match the oracle's CASE-gated
 # aggregation of the source table exactly — count(col) counting only
@@ -3524,7 +3525,7 @@ def q_zarr_evolving_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     synth_once(parent, _make, token=source_token(sf_dir, "events", "zev-v1"))
-    back = read_zarr_dir(spark, parent, schema_mode="union")
+    back = read_zarr_dir(spark, parent, missing_ok=True)
     return (
         back.groupBy("store")
         .agg(
@@ -4117,7 +4118,7 @@ def q_atl11_dhdt_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 # variable sets — some granules carry auxiliary variables (here
 # h_corr_sigma on the even tracks) that others lack, and
 # xr.open_mfdataset(combine='nested') unions them with missing reads
-# (atlxi_dhdt.py:73-82). The cube is read with schema_mode='union';
+# (atlxi_dhdt.py:73-82). The cube is read with missing_ok=True;
 # rows from sigma-less tracks carry a NULL sigma array (coalesced to a
 # NULL-element array so the zip-explode keeps their cycles), the
 # per-point regression runs over every track, and the sigma aggregates
@@ -4184,7 +4185,7 @@ def q_atl11_union_dhdt(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         synth_once(store, make, token="v1")
-    cube = read_zarr_dir(spark, parent, schema_mode="union")
+    cube = read_zarr_dir(spark, parent, missing_ok=True)
     # sigma-less tracks: NULL array -> array of NULLs, so arrays_zip
     # doesn't null out and the explode keeps every cycle of every track
     cube = cube.withColumn(

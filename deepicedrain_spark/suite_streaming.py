@@ -410,13 +410,12 @@ def q_streaming_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+    from deepicedrain_spark.suite_custom import scratch_path
 
     # deterministic per sf_dir (ADVICE r2: uuid names accumulated /tmp
     # litter across runs); overwrite mode already makes reruns
     # idempotent, so the same dir can be reused forever
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = f"/tmp/deepicedrain_sink_{key}"
+    out_dir = scratch_path(sf_dir, "sink")
     events = read_events_stream(spark, sf_dir)
     agg = tumbling_counts(events, window_minutes=60)
 
@@ -458,13 +457,12 @@ def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import shutil
 
     from deepicedrain_spark.streaming.sink import read_upsert_table, upsert_sink
+    from deepicedrain_spark.suite_custom import scratch_path
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = f"/tmp/deepicedrain_upsert_{key}"
+    out_dir = scratch_path(sf_dir, "upsert")
     ckpt = f"{out_dir}_ckpt"
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -500,19 +498,17 @@ def _staged_versioned_table(spark, sf_dir: str) -> str:
     0/1/2 of a table keyed on user_id, last-writer-wins by
     (t_us, event_id). Staged once per sf_dir (the two snapshot queries
     below share it); rebuilt if the manifest is missing."""
-    import hashlib
     import os
     import shutil
 
+    from deepicedrain_spark.io import load_table
     from deepicedrain_spark.streaming.sink import (
         apply_upsert_batch,
         table_history,
     )
+    from deepicedrain_spark.suite_custom import scratch_path
 
-    from deepicedrain_spark.io import load_table
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = f"/tmp/deepicedrain_timetravel_{key}"
+    out_dir = scratch_path(sf_dir, "timetravel")
     if os.path.exists(os.path.join(out_dir, "_manifest.json")):
         if len(table_history(out_dir)) == 3:
             return out_dir
@@ -641,7 +637,6 @@ def q_version_diff_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
 
     import numpy as np
@@ -651,9 +646,9 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_netcdf,
         write_netcdf,
     )
+    from deepicedrain_spark.suite_custom import scratch_path
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/deepicedrain_nc_append_{key}.nc"
+    path = scratch_path(sf_dir, "nc_append.nc")
     if os.path.exists(path):
         os.unlink(path)
     if os.path.exists(path + ".applied.json"):
@@ -699,7 +694,7 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             cells.writeStream.outputMode("append")
             .foreachBatch(write_batch)
             .trigger(availableNow=True)
-            .option("checkpointLocation", f"{path}_ckpt_{key}")
+            .option("checkpointLocation", f"{path}_ckpt")
             .start()
         )
         q.awaitTermination()
@@ -707,7 +702,7 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         import shutil
 
-        shutil.rmtree(f"{path}_ckpt_{key}", ignore_errors=True)
+        shutil.rmtree(f"{path}_ckpt", ignore_errors=True)
 
     # collapse the batch axis -> the order-invariant totals
     _dims, vs, _g = read_netcdf(path)
@@ -747,16 +742,15 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import shutil
 
     from deepicedrain_spark.streaming.sink import (
         apply_upsert_batch_bucketed,
         read_upsert_table_bucketed,
     )
+    from deepicedrain_spark.suite_custom import scratch_path
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = f"/tmp/deepicedrain_upsert_bkt_{key}"
+    out_dir = scratch_path(sf_dir, "upsert_bkt")
     ckpt = f"{out_dir}_ckpt"
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)

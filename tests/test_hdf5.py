@@ -9,12 +9,8 @@ import numpy as np
 import pytest
 
 from deepicedrain_spark.sources import hdf5lite
-from deepicedrain_spark.sources.hdf5 import (
-    plan_chunks,
-    read_atl06_beam,
-    read_hdf5,
-    spark_schema_for,
-)
+from deepicedrain_spark.sources.hdf5 import read_atl06_beam, read_hdf5
+from deepicedrain_spark.sources.stripes import plan_chunks, spark_schema_for
 
 
 def test_plan_chunks_covers_exactly():

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from deepicedrain_spark.functions.strings import json_field, split_track_pair
+from deepicedrain_spark.functions.strings import bin_label, json_field, split_track_pair
 from deepicedrain_spark.io import write_json
 from deepicedrain_spark.operators.aggregates import (
     cycle_delta_wide,
@@ -113,3 +113,10 @@ def test_json_field(spark):
     df = spark.createDataFrame([('{"lake": {"name": "Whillans"}}',), ("{}",)], "j string")
     got = [r[0] for r in df.select(json_field(F.col("j"), "$.lake.name")).collect()]
     assert got == ["Whillans", None]
+
+
+def test_bin_label_rejects_label_count_mismatch(spark):
+    """F5: n edges make n + 1 bins; any other label count is a caller
+    error raised as ValueError (an assert vanishes under python -O)."""
+    with pytest.raises(ValueError, match="2 edges make 3 bins, got 2 labels"):
+        bin_label(F.col("y"), [-100.0, 100.0], ["pt1", "pt2"])

@@ -27,7 +27,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 MODE_2D = "2d" in sys.argv[1:] or "2ds" in sys.argv[1:]
 SHARDED = "2ds" in sys.argv[1:]
